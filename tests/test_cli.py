@@ -185,3 +185,101 @@ def test_bench_clean_window_predicate():
     assert bench.clean_window(10.0, 2.4)     # < 25% of elapsed
     assert not bench.clean_window(10.0, 2.6)
     assert not bench.clean_window(154.0, 322.4)  # the r04 driver window
+
+
+def _v1_fixture(spark, tmp_path):
+    """The sf0.001 v1 tables written as a SPAN_FORMAT=v1 parquet store, and
+    the UTC day holding the most spans."""
+    from pyspark.sql import functions as F
+
+    from __spark_entry__ import SF_SMOKE_DIR
+    from zipkin_dependencies_spark.testdata import derived_v1_tables
+
+    spans, annos = derived_v1_tables(spark, SF_SMOKE_DIR)
+    store = str(tmp_path / "v1")
+    spans.write.parquet(f"{store}/zipkin_spans")
+    annos.write.parquet(f"{store}/zipkin_annotations")
+    spans = spark.read.parquet(f"{store}/zipkin_spans")
+    annos = spark.read.parquet(f"{store}/zipkin_annotations")
+    day = (
+        spans.groupBy(F.to_date(F.timestamp_micros("start_ts")).alias("d"))
+        .count()
+        .orderBy(F.desc("count"), "d")
+        .first()
+        .d
+    )
+    start_us = int(
+        dt.datetime(day.year, day.month, day.day, tzinfo=dt.timezone.utc).timestamp()
+    ) * 1_000_000
+    return store, spans, annos, day, (start_us, start_us + 86_400_000_000 - 1)
+
+
+def _links_at(spark, path):
+    return sorted(
+        (r.day, r.parent, r.child, r.call_count, r.error_count)
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+def test_cli_v1_source_writes_the_windowed_days_links(spark, tmp_path, monkeypatch):
+    """STORAGE_TYPE=mysql SPAN_FORMAT=v1: the day window is applied once,
+    on zipkin_spans.start_ts at the source, and the job writes the links of
+    exactly those spans."""
+    import zipkin_dependencies_spark.__main__ as cli
+    from zipkin_dependencies_spark.functions import normalize_spans
+    from zipkin_dependencies_spark.operators.link import links_from_spans
+    from zipkin_dependencies_spark.sources.v1 import v1_to_v2_spans
+
+    store, spans, annos, day, window = _v1_fixture(spark, tmp_path)
+    links_path = str(tmp_path / "links")
+    monkeypatch.setenv("STORAGE_TYPE", "mysql")
+    monkeypatch.setenv("SPAN_FORMAT", "v1")
+    monkeypatch.setenv("SPANS_PATH", store)
+    monkeypatch.setenv("LINKS_PATH", links_path)
+    monkeypatch.setenv("SPARK_MASTER", "local[4]")
+
+    assert cli.main([day.isoformat()]) == 0
+
+    want = sorted(
+        (day, *r)
+        for r in links_from_spans(
+            normalize_spans(v1_to_v2_spans(spans, annos, *window))
+        ).collect()
+    )
+    assert want and _links_at(spark, links_path) == want
+
+
+def test_cli_mysql_source_is_not_refiltered_by_the_job(spark, tmp_path, monkeypatch):
+    """SPAN_FORMAT=mysql: the live reader's rows (the pushed subquery's
+    joined shape, already windowed by the database) carry no span
+    timestamp; the job must link them as they are, with the same links as
+    the v1 parquet path."""
+    import zipkin_dependencies_spark.__main__ as cli
+    from zipkin_dependencies_spark.sources import backends
+    from zipkin_dependencies_spark.sources.v1 import CORE_KEYS, v2_spans_from_link_rows
+
+    store, spans, annos, day, window = _v1_fixture(spark, tmp_path)
+
+    def fake_read_spans_mysql(spark_, cfg, start_us, end_us, **kwargs):
+        s = spans.filter(spans.start_ts.between(start_us, end_us))
+        a = annos.filter(annos.a_key.isin(*CORE_KEYS))
+        return v2_spans_from_link_rows(
+            s.join(a, [s.trace_id == a.trace_id, s.id == a.span_id], "left_outer")
+            .select(s.trace_id, s.parent_id, s.id, a.a_key,
+                    a.endpoint_service_name, a.a_type)
+            .distinct()
+        )
+
+    monkeypatch.setattr(backends, "read_spans_mysql", fake_read_spans_mysql)
+    monkeypatch.setenv("STORAGE_TYPE", "mysql")
+    monkeypatch.setenv("SPARK_MASTER", "local[4]")
+    monkeypatch.setenv("SPAN_FORMAT", "mysql")
+    monkeypatch.setenv("LINKS_PATH", str(tmp_path / "mysql_links"))
+    assert cli.main([day.isoformat()]) == 0
+    monkeypatch.setenv("SPAN_FORMAT", "v1")
+    monkeypatch.setenv("SPANS_PATH", store)
+    monkeypatch.setenv("LINKS_PATH", str(tmp_path / "v1_links"))
+    assert cli.main([day.isoformat()]) == 0
+
+    got = _links_at(spark, str(tmp_path / "mysql_links"))
+    assert got and got == _links_at(spark, str(tmp_path / "v1_links"))

@@ -161,17 +161,79 @@ def test_multi_day_write_keeps_other_partitions(spark, spans_df_factory, tmp_pat
     }
 
 
-def test_grouped_and_partitioned_strategies_agree(spark):
-    """The applyInPandas-per-trace cross-check path and the production
-    sorted-stream path must produce identical links on the full sf0.001
-    forest — the two implementations share only the pure-Python kernel."""
+def _sf_forest(spark):
+    from __spark_entry__ import SF_SMOKE_DIR
     from zipkin_dependencies_spark.functions import normalize_spans
-    from zipkin_dependencies_spark.operators.link import links_from_spans
     from zipkin_dependencies_spark.testdata import derived_spans
 
-    norm = normalize_spans(derived_spans(spark, "/root/testdata/sf0.001"))
-    grouped = {tuple(r) for r in links_from_spans(norm, strategy="grouped").collect()}
-    partitioned = {
-        tuple(r) for r in links_from_spans(norm, strategy="partitioned").collect()
-    }
-    assert grouped == partitioned and len(grouped) > 0
+    return normalize_spans(derived_spans(spark, SF_SMOKE_DIR))
+
+
+def test_partitioned_links_match_python_linker(spark):
+    """The sorted-stream path on the full sf0.001 forest must equal the
+    pure-Python DependencyLinker run trace by trace over the collected
+    spans, with the F2 root window off and on. The oracle feeds each trace
+    in the kernel's (id, shared) order, nulls first, so multi-root traces
+    elect the same root."""
+    from collections import defaultdict
+
+    from __spark_entry__ import WINDOW_1996_US
+    from zipkin_dependencies_spark.linker import (
+        DependencyLinker,
+        Span,
+        trace_in_day_window,
+    )
+    from zipkin_dependencies_spark.operators.link import links_from_spans
+
+    norm = _sf_forest(spark)
+    traces = defaultdict(list)
+    for r in norm.collect():
+        traces[r.trace_key].append(
+            Span(
+                parent_id=r.parent_id, id=r.id, kind=r.kind,
+                local_service=r.local_service, remote_service=r.remote_service,
+                shared=bool(r.shared), is_error=bool(r.is_error),
+                timestamp=r.timestamp,
+            )
+        )
+    for window in (None, WINDOW_1996_US):
+        linker = DependencyLinker()
+        kept = 0
+        for spans in traces.values():
+            spans.sort(key=lambda s: (s.id is not None, s.id or "", s.shared))
+            if window is None or trace_in_day_window(spans, *window):
+                linker.put_trace(spans)
+                kept += 1
+        want = {
+            (l["parent"], l["child"], l["call_count"], l["error_count"])
+            for l in linker.link()
+        }
+        got = {tuple(r) for r in links_from_spans(norm, window=window).collect()}
+        assert got == want and len(want) > 0, window
+        if window is not None:
+            assert 0 < kept < len(traces)  # the window drops some traces
+
+
+def test_kernels_agree_when_traces_straddle_arrow_batches(spark):
+    """With 3-row Arrow batches most sf0.001 traces cross a batch boundary,
+    so the sorted-stream helper's carry path runs for nearly every trace;
+    the linker and the kernel path walker must give the same results as
+    with the default batch size."""
+    from zipkin_dependencies_spark.operators.link import links_from_spans
+    from zipkin_dependencies_spark.operators.paths import trace_paths
+    from zipkin_dependencies_spark.session import scoped_conf
+
+    norm = _sf_forest(spark)
+
+    def run():
+        links = {tuple(r) for r in links_from_spans(norm).collect()}
+        paths = sorted(
+            tuple(r) for r in trace_paths(norm, strategy="kernel").collect()
+        )
+        return links, paths
+
+    default = run()
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"}):
+        small = run()
+    assert small == default
+    assert len(default[0]) > 0 and len(default[1]) > 0

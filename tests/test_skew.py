@@ -124,31 +124,13 @@ def test_clustered_with_heavy_isolation_raises(spark, skewed_spans):
         )
 
 
-def test_sampled_heavy_discovery_matches_exact(spark, skewed_spans):
-    """The sampled heavy-key pre-pass (default) and the exact count
-    (heavy_sample_fraction=1.0) must produce identical LINKS — isolation
-    affects placement only, never the result."""
-    from zipkin_dependencies_spark.operators.aggregate import aggregate_links
-    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
+def test_heavy_trace_keys_finds_exactly_the_giant(spark, skewed_spans):
+    """The sampled heavy-key pre-pass returns the fixture's one giant trace
+    and none of its light traces."""
+    from zipkin_dependencies_spark.operators.link import _heavy_trace_keys
 
-    sampled = _links(
-        aggregate_links(
-            trace_links_partitioned(
-                skewed_spans, num_partitions=8, isolate_heavy_over=1_000
-            )
-        )
-    )
-    exact = _links(
-        aggregate_links(
-            trace_links_partitioned(
-                skewed_spans,
-                num_partitions=8,
-                isolate_heavy_over=1_000,
-                heavy_sample_fraction=1.0,
-            )
-        )
-    )
-    assert sampled == exact
+    keys = _heavy_trace_keys(skewed_spans, ["trace_key"], 1_000).collect()
+    assert [tuple(r) for r in keys] == [("t-heavy",)]
 
 def test_two_phase_giant_trace_matches_kernel_and_splits(spark, skewed_spans):
     """SURVEY §4's custom scale piece: a single trace dominating the corpus

@@ -15,6 +15,7 @@ import logging
 import sys
 
 from .config import engine_env, micros_day_repr
+from .operators.day_filter import DayFilter
 from .plans.job import DependencyLinksJob, JobConfig
 
 
@@ -67,10 +68,20 @@ def main(argv: list[str] | None = None) -> int:
 
     environ = dict(_os.environ)
     clustered_scan = False
+    start_us = env.day_ms * 1000
+    end_us = start_us + 86_400_000_000 - 1
+    # the v1 sources (parquet tables, live mysql) apply the F1 window in
+    # their scan, as the reference's pushed WHERE s.start_ts BETWEEN does;
+    # their spans carry no timestamp, so the job must not filter again
+    window_at_source = env.day_filter is DayFilter.SPAN_WINDOW and (
+        env.source_format in ("v1", "mysql")
+    )
     if env.source_format == "v1":
+        window = (start_us, end_us) if window_at_source else (None, None)
         spans_df = v1_to_v2_spans(
             spark.read.parquet(f"{env.spans_path}/zipkin_spans"),
             spark.read.parquet(f"{env.spans_path}/zipkin_annotations"),
+            *window,
         )
     elif env.source_format == "json":
         spans_df = read_spans_json(spark, env.spans_path)
@@ -105,12 +116,11 @@ def main(argv: list[str] | None = None) -> int:
     elif env.source_format == "mysql":
         from .sources.backends import mysql_config_from_env, read_spans_mysql
 
-        lo = env.day_ms * 1000
         spans_df = read_spans_mysql(
             spark,
             mysql_config_from_env(environ),
-            start_us=lo,
-            end_us=lo + 86_400_000_000 - 1,
+            start_us=start_us,
+            end_us=end_us,
         )
     else:
         spans_df = read_spans_parquet(spark, env.spans_path)
@@ -121,7 +131,7 @@ def main(argv: list[str] | None = None) -> int:
             day=day,
             spans_path=env.spans_path,
             links_path=env.links_path,
-            day_filter=env.day_filter,
+            day_filter=None if window_at_source else env.day_filter,
             strict_trace_id=env.strict_trace_id,
             clustered=clustered_scan,
         ),

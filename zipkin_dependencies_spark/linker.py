@@ -1,7 +1,8 @@
 """Per-trace dependency linking — the semantic core of the engine.
 
 Pure Python, no Spark imports: this module is the unit-testable kernel that the
-Arrow-vectorized grouped-map operator (``operators/link.py``) wraps. Semantics
+sorted-stream ``mapInPandas`` operator (``operators/link.py``) runs once per
+trace of each repartitioned, sorted partition. Semantics
 re-implement the behavior of the external ``zipkin2.internal.DependencyLinker``
 + ``zipkin2.internal.SpanNode`` (zipkin 3.6.0) as invoked by the reference at:
 

@@ -6,7 +6,7 @@ from .dedup import dedupe_spans
 from .events_analytics import event_transitions, window_anomalies
 from .funnel import funnel
 from .graph import service_pagerank, service_reachability, trace_size_percentiles
-from .link import links_from_spans, trace_links
+from .link import links_from_spans
 from .sessionize import sessionize
 
 __all__ = [
@@ -22,7 +22,6 @@ __all__ = [
     "service_pagerank",
     "service_reachability",
     "sessionize",
-    "trace_links",
     "trace_size_percentiles",
     "window_anomalies",
 ]

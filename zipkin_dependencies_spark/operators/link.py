@@ -1,29 +1,35 @@
 """The per-trace linking operator — the one non-relational kernel (SURVEY §2.6).
 
-Spark mapping (a) from the survey: ``groupBy(trace_key).applyInPandas`` over
-the Arrow channel, executing the pure-Python linker per trace. Each group is
-one trace; output is the per-trace link table, which the global A2 aggregation
+Spark mapping: ``repartition(trace_key)`` + ``sortWithinPartitions`` + one
+``mapInPandas`` pass over the Arrow channel. ``_sorted_groups`` cuts each
+task's sorted span stream into complete traces, and the pure-Python linker
+runs per trace — the reference's per-task linker over a trace-sorted row
+stream (mysql/.../DependencyLinkSpanIterator.java:25-56). The path walker
+(operators/paths.py) runs its per-trace chain walk on the same helper.
+Output is the per-partition link table, which the global A2 aggregation
 then sums. Map-side cost is bounded: the kernel's output cardinality is
-O(|services|²) per trace, orders of magnitude smaller than its input.
+O(|services|²) per partition, orders of magnitude smaller than its input.
 
 Scale notes (100 TB):
-- the groupBy(trace_key) shuffle is THE big shuffle of the pipeline; AQE
-  coalesces post-shuffle partitions. Bucketed span storage on trace_key would
-  remove it entirely (G1 parity — see plans/job.py notes).
+- the repartition(trace_key) shuffle is THE big shuffle of the pipeline.
+  Bucketed span storage on trace_key removes it entirely (``clustered``,
+  G1 parity — see plans/job.py notes).
 - per-trace skew ("Heavy" scenario): one giant trace lands on one task. The
   kernel is O(n) in spans-per-trace with small constants (dict/deque), and
-  holds only one trace's 8 narrow columns in memory at once — a 10⁷-span
-  trace is ~1 GB of Python objects, survivable; two-phase subtree linking is
-  the round-2+ hardening for anything beyond that.
+  holds only the open trace's narrow columns across batches — a 10⁷-span
+  trace is ~1 GB of Python objects, survivable; ``isolate_heavy_over`` and
+  ``links_from_spans_two_phase`` are the routes beyond that.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from itertools import repeat
+from typing import Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,9 +37,30 @@ from pyspark.sql import types as T
 from ..linker import DependencyLinker, Span, trace_in_day_window
 from ..schemas import TRACE_LINKS_SCHEMA
 
+#: fraction of spans the seeded heavy-trace pre-pass samples (see
+#: ``_heavy_trace_keys``)
+HEAVY_SAMPLE_FRACTION = 0.05
 
-def _rows_to_spans(pdf: pd.DataFrame) -> list[Span]:
-    # itertuples over 8 narrow columns; avoids pandas .apply overhead
+#: the LINK_INPUT_SCHEMA columns the linker reads, in ``spans_from_columns``
+#: argument order
+_SPAN_COLS = (
+    "parent_id", "id", "kind", "local_service", "remote_service",
+    "shared", "is_error", "timestamp",
+)
+
+
+def spans_from_columns(
+    parent_id, id, kind, local_service, remote_service, shared, is_error,
+    timestamp,
+) -> list[Span]:
+    """Column-major span fields → one trace's ``Span`` list.
+
+    Accepts numpy arrays or lists. Arrow nulls may arrive as None or NaN:
+    a non-string id/service becomes None, a null flag False, a null
+    timestamp None. Pass ``timestamp=None`` when the caller keeps no
+    timestamps (streaming state)."""
+    if timestamp is None:
+        timestamp = repeat(None)
     return [
         Span(
             parent_id=p if isinstance(p, str) else None,
@@ -46,46 +73,85 @@ def _rows_to_spans(pdf: pd.DataFrame) -> list[Span]:
             timestamp=int(ts) if ts is not None and ts == ts else None,
         )
         for p, i, k, ls, rs, sh, er, ts in zip(
-            pdf["parent_id"].values,
-            pdf["id"].values,
-            pdf["kind"].values,
-            pdf["local_service"].values,
-            pdf["remote_service"].values,
-            pdf["shared"].values,
-            pdf["is_error"].values,
-            pdf["timestamp"].values,
+            parent_id, id, kind, local_service, remote_service, shared,
+            is_error, timestamp,
         )
     ]
 
 
-def make_trace_linker(window: tuple[int, int] | None = None):
-    """Build the grouped-map function. ``window=(start_us, end_us)`` enables
-    the F2 per-trace root-timestamp filter *inside* the kernel — zero extra
-    shuffle, exactly where the reference applies it
-    (cassandra3/.../SpansToDependencyLinks.java:36-42)."""
+def _sorted_groups(
+    batches: Iterable[pd.DataFrame],
+    key_cols: Sequence[str],
+    value_cols: Sequence[str],
+) -> Iterator[tuple[tuple, list]]:
+    """Cut a partition's key-sorted Arrow batch stream into complete groups.
 
-    def link_one_trace(pdf: pd.DataFrame) -> pd.DataFrame:
-        spans = _rows_to_spans(pdf)
-        if window is not None and not trace_in_day_window(spans, *window):
-            return pd.DataFrame(columns=["parent", "child", "call_count", "error_count"])
-        links = DependencyLinker().put_trace(spans).link()
-        if not links:
-            return pd.DataFrame(columns=["parent", "child", "call_count", "error_count"])
-        return pd.DataFrame(links)[["parent", "child", "call_count", "error_count"]]
+    Yields ``(key, columns)`` once per group, in stream order: ``key`` is
+    the tuple of the group's ``key_cols`` values, ``columns`` one numpy
+    array per ``value_cols`` entry. A group is yielded when the next key
+    (or the end of the stream) closes it, so a group that straddles Arrow
+    batches arrives whole: its per-batch slices are kept and concatenated
+    once. Memory stays O(batch + open group), never O(partition)."""
+    open_key: tuple | None = None
+    chunks: list[list] = []
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        keys = [pdf[c].to_numpy() for c in key_cols]
+        cols = [pdf[c].to_numpy() for c in value_cols]
+        # boundary where ANY key column changes between adjacent rows
+        changed = keys[0][1:] != keys[0][:-1]
+        for k in keys[1:]:
+            changed = changed | (k[1:] != k[:-1])
+        starts = [0, *(np.flatnonzero(changed) + 1).tolist(), n]
+        for s, e in zip(starts, starts[1:]):
+            key = tuple(k[s] for k in keys)
+            if chunks and key != open_key:
+                yield open_key, _joined(chunks)
+                chunks = []
+            open_key = key
+            chunks.append([c[s:e] for c in cols])
+    if chunks:
+        yield open_key, _joined(chunks)
 
-    return link_one_trace
+
+def _joined(chunks: list[list]) -> list:
+    if len(chunks) == 1:
+        return chunks[0]
+    return [np.concatenate(parts) for parts in zip(*chunks)]
 
 
-def trace_links(normalized_spans: DataFrame, window: tuple[int, int] | None = None) -> DataFrame:
-    """LINK_INPUT_SCHEMA rows → per-trace links (pre-aggregation).
+def _kernel_partitions(spark: SparkSession) -> int:
+    """Partition count of a Python-kernel stage. AQE sizes post-shuffle
+    partitions by BYTES, which under-parallelizes a Python-cost-bound stage
+    (spans are narrow; per-byte kernel cost is high). Floor at the
+    cluster's core count so every core works; at real scale raise
+    ``spark.sql.shuffle.partitions`` to ~2-4× cores for stragglers."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
 
-    Reference strategy: one applyInPandas group per trace. Semantically the
-    cleanest mapping, but each group pays a fixed Arrow/pandas round-trip —
-    with millions of small traces that per-group overhead dominates. Kept as
-    the cross-check implementation; the production path is
-    ``trace_links_partitioned``."""
-    return normalized_spans.groupBy("trace_key").applyInPandas(
-        make_trace_linker(window), schema=TRACE_LINKS_SCHEMA
+
+def _heavy_trace_keys(df: DataFrame, group_cols: list[str], over: int) -> DataFrame:
+    """→ the ``group_cols`` of every group with more than ``over`` rows.
+
+    Discovery is SAMPLED (``HEAVY_SAMPLE_FRACTION``, seeded): a group with
+    n rows surfaces ~n·f sampled rows, so thresholding sampled counts at
+    over·f/2 finds every genuinely heavy key with overwhelming probability
+    while scanning only f of the table — at 100 TB an exact
+    ``groupBy().count()`` pre-pass would itself be a span-scale
+    aggregation. Mis-detection only moves work: a missed heavy trace still
+    links correctly (co-hashed, slower), a false positive routes a light
+    trace alone. The result is tiny (skew means FEW keys)."""
+    cutoff = max(1.0, over * HEAVY_SAMPLE_FRACTION / 2.0)
+    return (
+        df.sample(fraction=HEAVY_SAMPLE_FRACTION, seed=11)
+        .groupBy(*group_cols)
+        .count()
+        .filter(F.col("count") > cutoff)
+        .select(*group_cols)
     )
 
 
@@ -96,25 +162,29 @@ def trace_links_partitioned(
     day_col: str | None = None,
     isolate_heavy_over: int | None = None,
     clustered: bool = False,
-    heavy_sample_fraction: float = 0.05,
 ) -> DataFrame:
-    """Scale path: repartition by trace_key + sortWithinPartitions, then one
-    mapInPandas pass that walks each partition's sorted stream, cutting trace
-    groups at key boundaries (the reference's MySQL sorted-iterator shape,
+    """LINK_INPUT_SCHEMA rows → per-partition links (pre-aggregation).
+
+    repartition by trace_key + sortWithinPartitions, then one mapInPandas
+    pass that links each complete trace ``_sorted_groups`` cuts from the
+    partition's sorted stream (the reference's MySQL sorted-iterator shape,
     mysql/.../DependencyLinkSpanIterator.java:25-56, done with a secondary
     sort instead of a peeking iterator).
 
-    Why this wins at 100 TB:
-    - ONE shuffle (same exchange the groupBy needs anyway), but the Python
-      boundary is crossed once per *partition*, not once per *trace*:
-      Arrow batches stream through, and only the partial trace at a batch
-      boundary is carried over — O(batch) memory, not O(partition).
-    - links are partially aggregated map-side into a dict before emission,
-      so the final A2 exchange moves one row per distinct (parent, child)
-      per partition — the reference's reduceByKey combiner, done one stage
-      earlier than Catalyst's HashAggregate(partial) would.
-    - skew: a giant trace still lands on one task (matching applyInPandas),
-      but costs only its own O(n) linking, with no per-trace setup tax.
+    Why this shape:
+    - ONE shuffle, and the Python boundary is crossed once per *partition*,
+      not once per *trace*: Arrow batches stream through, and only the
+      trace open at a batch boundary is carried over.
+    - links are partially aggregated map-side into one ``DependencyLinker``
+      per task before emission, so the final A2 exchange moves one row per
+      distinct (parent, child) per partition — the reference's reduceByKey
+      combiner, done one stage earlier than Catalyst's partial aggregate.
+    - skew: a giant trace still lands on one task, but costs only its own
+      O(n) linking, with no per-trace setup tax.
+
+    ``window=(start_us, end_us)`` enables the F2 per-trace root-timestamp
+    filter *inside* the kernel — zero extra shuffle, exactly where the
+    reference applies it (cassandra3/.../SpansToDependencyLinks.java:36-42).
 
     With ``day_col`` set, the group key becomes (day, trace_key) and the
     output carries ``day`` — one job links every affected day (the streaming
@@ -129,23 +199,13 @@ def trace_links_partitioned(
 
     ``isolate_heavy_over=N`` adds skew routing (the reference's Heavy IT
     hazard, SURVEY §4: AQE skew splitting can't apply to stateful Python
-    stages because one trace MUST stay whole): a pre-pass counts spans per
-    trace, and traces above N spans get a dedicated routing key so the hash
-    exchange places each giant trace alone instead of stacking it on top of
-    a normal partition's worth of other traces. Linking a giant trace is
-    still one task — O(n) with small constants — but it no longer makes
-    stragglers of everyone hashed alongside it.
-
-    Heavy discovery is SAMPLED (``heavy_sample_fraction``, seeded): a trace
-    with n spans surfaces ~n·f sampled rows, so thresholding sampled counts
-    at N·f/2 finds every genuinely heavy key with overwhelming probability
-    while scanning only f of the table — at 100 TB the full
-    ``groupBy().count()`` pre-pass would itself be a span-scale aggregation.
-    Mis-detection is safe by construction: a missed heavy trace still links
-    correctly (just co-hashed, slower), a false positive merely routes a
-    light trace alone — the RESULT is placement-independent. Pass
-    ``heavy_sample_fraction=1.0`` to force the exact count (tiny inputs
-    where a sample is noise).
+    stages because one trace MUST stay whole): the sampled pre-pass
+    ``_heavy_trace_keys`` finds traces above N spans, and each gets a
+    dedicated routing key so the hash exchange places each giant trace alone
+    instead of stacking it on top of a normal partition's worth of other
+    traces. Linking a giant trace is still one task, but it no longer makes
+    stragglers of everyone hashed alongside it. The RESULT is
+    placement-independent.
 
     ``isolate_heavy_over`` is incompatible with ``clustered=True``: routing
     requires a repartition, which would silently reintroduce the span-scale
@@ -178,8 +238,6 @@ def trace_links_partitioned(
     )
 
     def link_partition(batches: Iterable[pd.DataFrame]):
-        import numpy as np
-
         from ..worker_logging import init_worker_logging
 
         init_worker_logging()  # executor-side ZIPKIN_LOG_LEVEL bootstrap
@@ -187,49 +245,12 @@ def trace_links_partitioned(
         # one accumulator per (task, day) = the reference's per-task linker
         # (CassandraRowsToDependencyLinks) doubling as the map-side combiner
         linkers: dict = {}
-
-        def flush(gkey: tuple, spans: list[Span]) -> None:
+        for key, cols in _sorted_groups(batches, group_cols, _SPAN_COLS):
+            spans = spans_from_columns(*cols)
             if window is not None and not trace_in_day_window(spans, *window):
-                return
-            day = gkey[0] if day_col else None
-            linkers.setdefault(day, DependencyLinker()).put_trace(spans)
-
-        def group_key_arrays(pdf: pd.DataFrame) -> tuple:
-            return tuple(pdf[c].to_numpy() for c in group_cols)
-
-        carry_key: tuple | None = None
-        carry_spans: list[Span] = []
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
                 continue
-            key_arrs = group_key_arrays(pdf)
-            # boundary where ANY key column changes between adjacent rows
-            changed = key_arrs[0][1:] != key_arrs[0][:-1]
-            for arr in key_arrs[1:]:
-                changed = changed | (arr[1:] != arr[:-1])
-            spans_all = _rows_to_spans(pdf)
-            starts = [0, *(np.flatnonzero(changed) + 1).tolist(), n]
-            key_at = lambda i: tuple(arr[i] for arr in key_arrs)  # noqa: E731
-            gi = 0
-            if carry_spans:
-                if carry_key == key_at(0):
-                    carry_spans.extend(spans_all[0 : starts[1]])
-                    if len(starts) == 2:
-                        continue  # whole batch is one group — keep carrying
-                    flush(carry_key, carry_spans)
-                    gi = 1
-                else:
-                    flush(carry_key, carry_spans)
-                carry_spans = []
-                carry_key = None
-            # all groups except the batch's last are complete
-            for i in range(gi, len(starts) - 2):
-                flush(key_at(starts[i]), spans_all[starts[i] : starts[i + 1]])
-            carry_key = key_at(starts[-2])
-            carry_spans = list(spans_all[starts[-2] : starts[-1]])
-        if carry_spans:
-            flush(carry_key, carry_spans)
+            day = key[0] if day_col else None
+            linkers.setdefault(day, DependencyLinker()).put_trace(spans)
         rows = [
             (
                 (day, link["parent"], link["child"], link["call_count"], link["error_count"])
@@ -241,35 +262,17 @@ def trace_links_partitioned(
         ]
         yield pd.DataFrame(rows, columns=out_cols)
 
-    # explicit partition count: AQE sizes post-shuffle partitions by BYTES,
-    # which under-parallelizes a Python-cost-bound stage (spans are narrow;
-    # linking cost per byte is high). Floor at the cluster's core count so
-    # every core links; at real scale pass ~2-4× cores for stragglers.
     if num_partitions is None:
-        num_partitions = max(
-            normalized_spans.sparkSession.sparkContext.defaultParallelism,
-            int(normalized_spans.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
+        num_partitions = _kernel_partitions(normalized_spans.sparkSession)
     df = normalized_spans
     if isolate_heavy_over:
-        # identify heavy traces (tiny result: skew means FEW keys); broadcast
-        # the set into a routing column. Light traces route by their group
-        # hash; each heavy trace routes by its own key ⇒ lands alone.
-        if heavy_sample_fraction >= 1.0:
-            counted = df.groupBy(*group_cols).count()
-            cutoff = float(isolate_heavy_over)
-        else:
-            counted = (
-                df.sample(fraction=heavy_sample_fraction, seed=11)
-                .groupBy(*group_cols)
-                .count()
-            )
-            cutoff = max(1.0, isolate_heavy_over * heavy_sample_fraction / 2.0)
-        heavy = (
-            counted.filter(F.col("count") > cutoff)
-            .select(F.concat_ws("|", *group_cols).alias("__gk"))
-        )
+        # broadcast the heavy-key set into a routing column. Light traces
+        # route by their group hash; each heavy trace routes by its own
+        # key ⇒ lands alone.
         gk = F.concat_ws("|", *group_cols)
+        heavy = _heavy_trace_keys(df, group_cols, isolate_heavy_over).select(
+            gk.alias("__gk")
+        )
         df = (
             df.join(
                 F.broadcast(heavy.withColumn("__heavy", F.lit(True))),
@@ -284,13 +287,12 @@ def trace_links_partitioned(
             )
             .drop("__gk", "__heavy")
         )
-        out = (
+        return (
             df.repartition(num_partitions, "__route")
             .sortWithinPartitions(*order_cols)
             .drop("__route")
             .mapInPandas(link_partition, schema=schema)
         )
-        return out
     if clustered:
         # bucketed input: complete traces per partition by construction;
         # only the in-partition sort (no exchange) remains
@@ -307,40 +309,29 @@ def trace_links_partitioned(
 def links_from_spans(
     normalized_spans: DataFrame,
     window: tuple[int, int] | None = None,
-    strategy: str = "partitioned",
     clustered: bool = False,
     isolate_heavy_over: int | None = None,
-    heavy_sample_fraction: float = 0.05,
 ) -> DataFrame:
-    """Full core: per-trace linking + global A2 reduction.
-
-    strategy='partitioned' (default): sorted-stream partition linking with
-    map-side combine. strategy='grouped': one applyInPandas call per trace —
-    the reference-shaped cross-check path. clustered=True: input is a
-    bucketed span table; skip the grouping shuffle (G1 parity).
-    isolate_heavy_over=N: route giant traces to dedicated partitions (skew
-    isolation — must never change the result, only the placement)."""
+    """Full core: per-trace linking (``trace_links_partitioned``) + global
+    A2 reduction. clustered=True: input is a bucketed span table; skip the
+    grouping shuffle (G1 parity). isolate_heavy_over=N: route giant traces
+    to dedicated partitions (skew isolation — must never change the result,
+    only the placement)."""
     from .aggregate import aggregate_links
 
-    if strategy == "partitioned":
-        return aggregate_links(
-            trace_links_partitioned(
-                normalized_spans,
-                window,
-                clustered=clustered,
-                isolate_heavy_over=isolate_heavy_over,
-                heavy_sample_fraction=heavy_sample_fraction,
-            )
+    return aggregate_links(
+        trace_links_partitioned(
+            normalized_spans,
+            window,
+            clustered=clustered,
+            isolate_heavy_over=isolate_heavy_over,
         )
-    if strategy == "grouped":
-        return aggregate_links(trace_links(normalized_spans, window))
-    raise ValueError(f"unknown strategy {strategy!r}")
+    )
 
 
 def links_from_spans_two_phase(
     normalized_spans: DataFrame,
     giant_over: int = 100_000,
-    heavy_sample_fraction: float = 0.05,
 ) -> DataFrame:
     """Two-phase linking for GIANT traces (SURVEY §4's one custom scale
     piece; the reference's Heavy IT hazard taken past what isolation fixes,
@@ -368,23 +359,12 @@ def links_from_spans_two_phase(
     kernel contract is pinned by randomized cross-checks in
     tests/test_link_relational.py; the giant split by tests/test_skew.py).
 
-    Giant discovery reuses the sampled detector (seeded; a missed giant
+    Giant discovery is ``_heavy_trace_keys`` (seeded sample; a missed giant
     still links correctly via the kernel, just slower — placement-only)."""
-    from .aggregate import aggregate_links
     from .link_relational import links_from_spans_hybrid
 
     df = normalized_spans
-    if heavy_sample_fraction >= 1.0:
-        counted = df.groupBy("trace_key").count()
-        cutoff = float(giant_over)
-    else:
-        counted = (
-            df.sample(fraction=heavy_sample_fraction, seed=11)
-            .groupBy("trace_key")
-            .count()
-        )
-        cutoff = max(1.0, giant_over * heavy_sample_fraction / 2.0)
-    giants = counted.filter(F.col("count") > cutoff).select("trace_key")
+    giants = _heavy_trace_keys(df, ["trace_key"], giant_over)
 
     # key-cardinality driver check (like the reference's isEmpty() actions,
     # F5): on the overwhelmingly common day with NO giant trace, skip the

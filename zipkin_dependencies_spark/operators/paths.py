@@ -6,11 +6,11 @@ The path of a leaf span is the service sequence along its raw
 ``parent_id`` chain, root-first, joined with ``->``. Two construction
 engines (``strategy``, see ``DEFAULT_STRATEGY``):
 
-- **kernel** (default since r11): ONE repartition by trace_key + one
-  Arrow ``mapInPandas`` pass that walks each trace's chains in plain
-  Python — the flagship linker's grouped-kernel shape
-  (operators/link.py). One shuffle of the narrow 4-column span
-  projection at any scale.
+- **kernel** (default since r11): ONE repartition by trace_key + sort +
+  one Arrow ``mapInPandas`` pass that walks each trace's chains in plain
+  Python — the flagship linker's shape, on its shared sorted-stream
+  helper (operators/link.py::_sorted_groups). One shuffle of the narrow
+  4-column span projection at any scale.
 - **doubling**: distributed POINTER DOUBLING with segment concatenation
   (the same O(log depth) technique as the relational linker's E4 proof):
   every span starts with ``(ptr = parent_id, seg = [service])``; each
@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..memo import register_memo
+from .link import _kernel_partitions, _sorted_groups
 
 MAX_DEPTH = 127
 
@@ -74,9 +75,10 @@ DEFAULT_MATERIALIZE = "persist"
 _PATH_MEMO: dict[tuple, DataFrame] = register_memo({})
 
 #: path-construction engine (r11, guide §4.2 / §2.4). "kernel": ONE
-#: exchange (repartition by trace_key) + one Arrow pass whose per-trace
-#: chain walk runs in plain Python — the same grouped-kernel shape as the
-#: flagship linker (operators/link.py::trace_links_partitioned), measured
+#: exchange (repartition by trace_key) + sort + one mapInPandas pass whose
+#: per-trace chain walk runs in plain Python — the flagship linker's
+#: shape, through the same sorted-stream helper
+#: (operators/link.py::_sorted_groups), measured
 #: 2× faster at sf0.1 AND strictly fewer shuffles at any scale (the
 #: doubling re-shuffles the full span frame twice per round,
 #: log2(depth) rounds). "doubling": the distributed pointer-doubling
@@ -89,8 +91,8 @@ DEFAULT_STRATEGY = "kernel"
 
 def _make_paths_walker(max_depth: int):
     """mapInPandas kernel: walk each trace's leaf→root chains in plain
-    Python over a trace_key-sorted partition stream (the
-    link_partition carry pattern — traces may straddle Arrow batches).
+    Python over a trace_key-sorted partition stream (``_sorted_groups``
+    delivers each trace whole, even when it straddles Arrow batches).
 
     Exact doubling semantics (pinned by tests/test_pipeline_ops.py's
     random forests + the DuckDB recursive-CTE twins): a leaf is a span
@@ -103,13 +105,15 @@ def _make_paths_walker(max_depth: int):
     bound = max_depth + 1
 
     def walk_partition(batches):
-        import numpy as np
         import pandas as pd
 
         out_rows: list[tuple] = []
-
-        def flush(trace_key, ids, pars, svcs) -> None:
+        for (trace_key,), (ids, pars, svcs) in _sorted_groups(
+            batches, ["trace_key"], ["id", "parent_id", "svc"]
+        ):
             nodes = dict(zip(ids, zip(pars, svcs)))
+            # a null parent arrives as None (a NaN would act the same: it
+            # names no span, so the chain terminates there)
             parents = {p for p, _ in nodes.values() if p is not None}
             for leaf in nodes:
                 if leaf in parents:
@@ -133,40 +137,6 @@ def _make_paths_walker(max_depth: int):
                 # bound exhausted without termination: cycle or deeper
                 # than max_depth+1 — dropped, exactly like a pointer
                 # that never resolves
-
-        carry_key = None
-        carry: list[tuple] = []  # [(ids, pars, svcs) array slices]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            tk = pdf["trace_key"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            # None (not NaN) for missing parents: object-dtype pandas
-            # columns from Arrow keep None, but be explicit
-            pars = np.where(pd.isna(pdf["parent_id"]), None, pdf["parent_id"])
-            svcs = pdf["svc"].to_numpy()
-            starts = [0, *(np.flatnonzero(tk[1:] != tk[:-1]) + 1).tolist(), n]
-            gi = 0
-            if carry:
-                if carry_key == tk[0]:
-                    carry.append((ids[: starts[1]], pars[: starts[1]], svcs[: starts[1]]))
-                    if len(starts) == 2:
-                        continue  # whole batch is one trace — keep carrying
-                    _flush_carry(flush, carry_key, carry)
-                    gi = 1
-                else:
-                    _flush_carry(flush, carry_key, carry)
-                carry = []
-                carry_key = None
-            for i in range(gi, len(starts) - 2):
-                s, e = starts[i], starts[i + 1]
-                flush(tk[s], ids[s:e], pars[s:e], svcs[s:e])
-            s, e = starts[-2], starts[-1]
-            carry_key = tk[s]
-            carry = [(ids[s:e], pars[s:e], svcs[s:e])]
-        if carry:
-            _flush_carry(flush, carry_key, carry)
         yield pd.DataFrame(
             out_rows, columns=["trace_key", "leaf_id", "path", "depth"]
         )
@@ -174,38 +144,22 @@ def _make_paths_walker(max_depth: int):
     return walk_partition
 
 
-def _flush_carry(flush, key, chunks) -> None:
-    """Concatenate a trace's cross-batch chunks and flush it."""
-    import numpy as np
-
-    ids = np.concatenate([c[0] for c in chunks])
-    pars = np.concatenate([c[1] for c in chunks])
-    svcs = np.concatenate([c[2] for c in chunks])
-    flush(key, ids, pars, svcs)
-
-
 def _trace_paths_kernel(
     normalized_spans: DataFrame, max_depth: int
 ) -> DataFrame:
     """Kernel-strategy path build: project the 4 consumed columns (the
     mapInPandas boundary is opaque to column pruning — guide §4.1), ONE
-    repartition by trace_key at Python-work-appropriate width (the
-    linker's num_partitions rationale: AQE sizes by bytes, which
-    under-parallelizes a Python-cost-bound stage), in-partition sort for
-    contiguous traces, one Arrow pass."""
-    spark = normalized_spans.sparkSession
+    repartition by trace_key at the linker's Python-kernel width
+    (``_kernel_partitions``), in-partition sort for contiguous traces,
+    one Arrow pass."""
     nodes = normalized_spans.select(
         "trace_key",
         "id",
         "parent_id",
         F.coalesce(F.col("local_service"), F.lit("(unknown)")).alias("svc"),
     )
-    n_part = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
     return (
-        nodes.repartition(n_part, "trace_key")
+        nodes.repartition(_kernel_partitions(normalized_spans.sparkSession), "trace_key")
         .sortWithinPartitions("trace_key")
         .mapInPandas(
             _make_paths_walker(max_depth),

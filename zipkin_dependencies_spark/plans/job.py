@@ -1,9 +1,10 @@
 """The engine's single query lifecycle (SURVEY §3, "our engine's lifecycle"):
 
 config → SparkSession → source adapter → normalize to the v2 span frame →
-day-filter variant (F1/F2/F3, default F2 parity) → dedupe → groupBy(trace_key)
-→ applyInPandas(linker) → groupBy(parent, child).agg(sum, sum) →
-day-partition overwrite write.
+day-filter variant (F1/F2/F3, default F2 parity) → dedupe →
+repartition(trace_key) + sortWithinPartitions → mapInPandas(linker per trace,
+via operators/link.py::_sorted_groups) → groupBy(parent, child).agg(sum, sum)
+→ day-partition overwrite write.
 
 One Catalyst plan end to end; the only Python hop is the Arrow-vectorized
 linker kernel; control crosses driver→executor at the write action only.
@@ -35,7 +36,9 @@ class JobConfig:
     day: str | dt.date                       # the UTC day to aggregate
     spans_path: str                          # span table location
     links_path: str | None = None            # output location (None ⇒ return only)
-    day_filter: DayFilter = DayFilter.TRACE_ROOT   # F2 Cassandra-parity default
+    day_filter: DayFilter | None = DayFilter.TRACE_ROOT   # F2 Cassandra-parity
+    #   default; None: the source already applied the day window (the v1
+    #   sources' pushed F1 scan predicate)
     strict_trace_id: bool = False            # G1 vs G2/G3 grouping
     dedupe: bool = True                      # D1 span dedup before grouping
     clustered: bool = False                  # input already trace-co-located

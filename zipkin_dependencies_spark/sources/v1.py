@@ -68,6 +68,10 @@ def v1_to_v2_spans(
     start_us: int | None = None,
     end_us: int | None = None,
 ) -> DataFrame:
+    """Two v1 tables → canonical v2 spans. ``start_us``/``end_us`` is the F1
+    day window on ``zipkin_spans.start_ts``, applied at the scan like the
+    reference's pushed WHERE. The output carries no span ``timestamp`` or
+    ``day``, so the window must be applied here, not downstream."""
     spans = zipkin_spans
     if start_us is not None:
         spans = spans.filter(F.col("start_ts").between(start_us, end_us))

@@ -38,11 +38,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..linker import DependencyLinker, Span
+from ..linker import DependencyLinker
+from ..operators.link import spans_from_columns
 from ..schemas import TRACE_LINKS_SCHEMA
 
 #: state kept per in-flight trace: the narrow span columns, column-major
-#: (arrays compress well in the state store and rebuild Spans cheaply).
+#: (arrays compress well in the state store and rebuild Spans cheaply), in
+#: ``spans_from_columns`` argument order; no timestamp (the stream links
+#: without the F2 window).
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("parent_id", T.ArrayType(T.StringType())),
@@ -62,14 +65,7 @@ _EMPTY_LINKS = pd.DataFrame(columns=["parent", "child", "call_count", "error_cou
 
 def _link_columns(cols: dict[str, list]) -> pd.DataFrame:
     """Column-major state → linked per-trace links table."""
-    spans = [
-        Span(
-            parent_id=p, id=i, kind=k, local_service=ls, remote_service=rs,
-            shared=bool(sh) if sh is not None else False,
-            is_error=bool(er) if er is not None else False,
-        )
-        for p, i, k, ls, rs, sh, er in zip(*(cols[c] for c in _STATE_COLS))
-    ]
+    spans = spans_from_columns(*(cols[c] for c in _STATE_COLS), timestamp=None)
     links = DependencyLinker().put_trace(spans).link()
     if not links:
         return _EMPTY_LINKS

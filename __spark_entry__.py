@@ -1839,10 +1839,10 @@ def q_mixing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_top_trace_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top root→leaf service paths (grouped Arrow-kernel path build —
-    one trace_key shuffle + per-trace Python walk, r11; DuckDB twin is a
-    recursive CTE): the multi-hop complement of the single-edge links
-    table."""
+    """Top root→leaf service paths (sorted-stream mapInPandas kernel path
+    build — one trace_key shuffle + per-trace Python chain walk; DuckDB
+    twin is a recursive CTE): the multi-hop complement of the single-edge
+    links table."""
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.paths import top_trace_paths
     from zipkin_dependencies_spark.testdata import derived_spans
@@ -2321,8 +2321,9 @@ def q_links_window_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_trace_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trace-shape health: distribution of root→leaf chain lengths from
-    the grouped-kernel path build (a deep tail = retry storm or broken
-    linking); output cardinality bounded by the depth cap."""
+    the sorted-stream mapInPandas kernel path build (a deep tail = retry
+    storm or broken linking); output cardinality bounded by the depth
+    cap."""
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.paths import trace_depth_histogram
     from zipkin_dependencies_spark.testdata import derived_spans
@@ -2603,8 +2604,9 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_path_latencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The k slowest root→leaf service paths (leaf timestamp lag behind
     the trace's first span) — the latency complement of top_trace_paths,
-    reusing the same memoized kernel-built path table. Integer µs
-    math end-to-end: hash-exact across engines."""
+    reusing the same memoized path table the sorted-stream mapInPandas
+    kernel builds. Integer µs math end-to-end: hash-exact across
+    engines."""
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.paths import path_latencies
     from zipkin_dependencies_spark.testdata import derived_spans

@@ -187,6 +187,31 @@ class TestEngineEnv:
         with pytest.raises(ValueError, match="STORAGE_TYPE"):
             engine_env({"STORAGE_TYPE": "hbase"}, "2016-07-16")
 
+    def test_span_formats_accepted(self):
+        for fmt in ("parquet", "json", "v1", "es", "cassandra", "mysql"):
+            assert engine_env({"SPAN_FORMAT": fmt}, "2016-07-16").source_format == fmt
+        assert engine_env({}, "2016-07-16").source_format == "parquet"
+
+    def test_unknown_span_format_raises(self):
+        # a misspelled format must not be read as parquet
+        with pytest.raises(ValueError, match="SPAN_FORMAT"):
+            engine_env({"SPAN_FORMAT": "jsonl"}, "2016-07-16")
+
+    def test_links_sink_backend_needs_live_format(self):
+        for fmt in ("es", "cassandra", "mysql"):
+            env = engine_env({"SPAN_FORMAT": fmt, "LINKS_SINK": "backend"}, "2016-07-16")
+            assert env.source_format == fmt
+        # a file format has no connector to write the links back through
+        for fmt in ("parquet", "json", "v1"):
+            with pytest.raises(ValueError, match="LINKS_SINK"):
+                engine_env({"SPAN_FORMAT": fmt, "LINKS_SINK": "backend"}, "2016-07-16")
+        with pytest.raises(ValueError, match="LINKS_SINK"):
+            engine_env({"LINKS_SINK": "backend"}, "2016-07-16")
+
+    def test_unknown_links_sink_raises(self):
+        with pytest.raises(ValueError, match="LINKS_SINK"):
+            engine_env({"SPAN_FORMAT": "es", "LINKS_SINK": "backnd"}, "2016-07-16")
+
     def test_strict_default_true_where_honored(self):
         # STRICT_TRACE_ID defaults true (CassandraDependenciesJob.java:65)
         assert engine_env({"STORAGE_TYPE": "cassandra3"}, "2016-07-16").strict_trace_id

@@ -62,7 +62,7 @@ def all_query_names():
 #: the driver never observed the summary line). This pinned subset keeps the
 #: fast suite exercising one representative of every engine family the
 #: optimization rounds touched: linker flagship + relational twin, the path
-#: family (pointer-doubling loop), connected-components consumers, BPE, the
+#: family (sorted-stream kernel), connected-components consumers, BPE, the
 #: prefix-filter/LSH dedup pair, curation (Arrow scrub), PQ, graph memos,
 #: and the quantile two-phase rank.
 ORACLE_SAMPLE = [
@@ -270,3 +270,20 @@ def test_ledgers_reconciled_with_registry():
     # queries (gen_evidence drops them; this guards a hand-edit)
     orphans = [q for q in ev if q not in names]
     assert not orphans, f"evidence for unregistered queries: {orphans}"
+
+
+def test_queries_md_matches_generator():
+    """QUERIES.md is exactly what tools/gen_queries_md.py renders from the
+    q_* docstrings: a docstring edit without a regenerate fails here."""
+    import importlib.util
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    spec = importlib.util.spec_from_file_location(
+        "gen_queries_md", os.path.join(root, "tools", "gen_queries_md.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(os.path.join(root, "QUERIES.md")) as fh:
+        assert fh.read() == gen.render(), (
+            "QUERIES.md is stale: run python tools/gen_queries_md.py"
+        )

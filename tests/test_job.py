@@ -227,9 +227,7 @@ def test_kernels_agree_when_traces_straddle_arrow_batches(spark):
 
     def run():
         links = {tuple(r) for r in links_from_spans(norm).collect()}
-        paths = sorted(
-            tuple(r) for r in trace_paths(norm, strategy="kernel").collect()
-        )
+        paths = sorted(tuple(r) for r in trace_paths(norm).collect())
         return links, paths
 
     default = run()

@@ -543,13 +543,10 @@ def test_mixing_plan_epochs_and_fraction(spark):
     assert code.keep_fraction9 == 1.0   # single-epoch fraction capped
 
 
-@pytest.mark.parametrize("strategy", ["kernel", "doubling"])
-def test_trace_paths_deep_dangling_cycle_semantics(spark, strategy):
-    """Path construction (both engines — the r11 grouped Arrow kernel and
-    the pointer-doubling loop it replaced on the query path): a 64-deep
-    chain resolves fully root-first; a dangling parent terminates the
-    chain at the dangling span; a cyclic trace's leaves are dropped; null
-    service renders as (unknown)."""
+def test_trace_paths_deep_dangling_cycle_semantics(spark):
+    """Path construction: a 64-deep chain resolves fully root-first; a
+    dangling parent terminates the chain at the dangling span; a cyclic
+    trace's leaves are dropped; null service renders as (unknown)."""
     from zipkin_dependencies_spark.operators.paths import trace_paths
     from zipkin_dependencies_spark.schemas import LINK_INPUT_SCHEMA
 
@@ -566,23 +563,17 @@ def test_trace_paths_deep_dangling_cycle_semantics(spark, strategy):
         ("cyc", "x", "z", "CLIENT", "cz", None, False, False, 1),
     ]
     norm = spark.createDataFrame(rows, schema=LINK_INPUT_SCHEMA)
-    got = {
-        r.trace_key: r.path
-        for r in trace_paths(norm, strategy=strategy).collect()
-    }
+    got = {r.trace_key: r.path for r in trace_paths(norm).collect()}
     assert got["deep"] == "->".join(f"s{i}" for i in range(65))
     assert got["dang"] == "root-ish->(unknown)"  # chain stops at dangling
     assert "cyc" not in got                       # cyclic leaves dropped
 
 
-@pytest.mark.parametrize("strategy", ["kernel", "doubling"])
-def test_trace_paths_max_depth_boundary_both_engines(spark, strategy):
-    """The exact keep/drop boundary both engines must share: a chain of
-    max_depth+1 nodes resolves (after r doubling rounds a pointer has
-    advanced 2^r hops; the kernel walk visits ≤ max_depth+1 nodes), a
-    chain of max_depth+2 nodes is dropped — same rule as the DuckDB
+def test_trace_paths_max_depth_boundary(spark):
+    """The exact keep/drop boundary: a chain of MAX_DEPTH+1 nodes resolves,
+    a chain of MAX_DEPTH+2 nodes is dropped — same rule as the DuckDB
     recursive twin's ``depth <= max_depth`` extension."""
-    from zipkin_dependencies_spark.operators.paths import trace_paths
+    from zipkin_dependencies_spark.operators.paths import MAX_DEPTH, trace_paths
     from zipkin_dependencies_spark.schemas import LINK_INPUT_SCHEMA
 
     def chain(tk: str, n: int):
@@ -593,15 +584,14 @@ def test_trace_paths_max_depth_boundary_both_engines(spark, strategy):
         ]
         return rows
 
-    # max_depth=7: 8-node chain kept (depth 8), 9-node chain dropped
+    # the DuckDB twins' max_depth default is 127 too
+    assert MAX_DEPTH == 127
+    # 128-node chain kept (depth 128), 129-node chain dropped
     norm = spark.createDataFrame(
-        chain("keep", 8) + chain("drop", 9), schema=LINK_INPUT_SCHEMA
+        chain("keep", 128) + chain("drop", 129), schema=LINK_INPUT_SCHEMA
     )
-    got = {
-        r.trace_key: r.depth
-        for r in trace_paths(norm, max_depth=7, strategy=strategy).collect()
-    }
-    assert got == {"keep": 8}
+    got = {r.trace_key: r.depth for r in trace_paths(norm).collect()}
+    assert got == {"keep": 128}
 
 
 @pytest.mark.parametrize("seed", [5, 23])
@@ -658,14 +648,11 @@ def test_collapse_bursts_matches_python_reference_on_random_events(spark, seed):
     assert got == sorted(expected)
 
 
-@pytest.mark.parametrize("strategy", ["kernel", "doubling"])
 @pytest.mark.parametrize("seed", [7, 41])
-def test_trace_paths_matches_python_reference_on_random_forests(
-    spark, seed, strategy
-):
-    """Randomized soundness for the path builder (both engines): on
-    arbitrary forests (dangling parents, cycles, null services, deep
-    chains) the output must equal a plain-Python per-trace chain walk."""
+def test_trace_paths_matches_python_reference_on_random_forests(spark, seed):
+    """Randomized soundness for the path builder: on arbitrary forests
+    (dangling parents, cycles, null services, deep chains) the output must
+    equal a plain-Python per-trace chain walk."""
     import random
 
     from zipkin_dependencies_spark.operators.paths import trace_paths
@@ -692,7 +679,7 @@ def test_trace_paths_matches_python_reference_on_random_forests(
     norm = spark.createDataFrame(rows, schema=LINK_INPUT_SCHEMA)
     got = sorted(
         (r.trace_key, r.leaf_id, r.path)
-        for r in trace_paths(norm, strategy=strategy).collect()
+        for r in trace_paths(norm).collect()
     )
 
     bytrace: dict = {}
@@ -776,49 +763,6 @@ def test_range_join_matches_python_reference_on_random_intervals(spark, seed):
             for r in range_join_points(p, i, bin_width=bin_width).collect()
         )
         assert got == expected, f"bin_width={bin_width}"
-
-
-def test_trace_paths_policies_agree_on_hard_forest(spark):
-    """The two per-round materialization policies (eager localCheckpoint
-    vs persist+explicit-release, BASELINE.md r05 policy measurement) are
-    plan-level choices only: identical results on the deep/dangling/cycle
-    forest, including the memoized tail."""
-    from zipkin_dependencies_spark.operators.paths import trace_paths
-    from zipkin_dependencies_spark.schemas import LINK_INPUT_SCHEMA
-
-    rows = [("deep", None, "n0", "SERVER", "s0", None, False, False, 1)]
-    rows += [
-        ("deep", f"n{i-1}", f"n{i}", "SERVER", f"s{i}", None, False, False, 1)
-        for i in range(1, 40)
-    ]
-    rows += [
-        ("dang", "missing", "a", "SERVER", "root-ish", None, False, False, 1),
-        ("cyc", "y", "x", "CLIENT", "cx", None, False, False, 1),
-        ("cyc", "x", "y", "CLIENT", "cy", None, False, False, 1),
-    ]
-    norm = spark.createDataFrame(rows, schema=LINK_INPUT_SCHEMA)
-    out = {}
-    for pol in ("eager", "persist"):
-        out[pol] = sorted(
-            (r.trace_key, r.leaf_id, r.path, r.depth)
-            for r in trace_paths(
-                norm, materialize=pol, strategy="doubling"
-            ).collect()
-        )
-    assert out["eager"] == out["persist"]
-    # and the r11 kernel engine agrees with both on the same hard forest
-    out["kernel"] = sorted(
-        (r.trace_key, r.leaf_id, r.path, r.depth)
-        for r in trace_paths(norm, strategy="kernel").collect()
-    )
-    assert out["kernel"] == out["persist"]
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        trace_paths(norm, materialize="bogus", strategy="doubling")
-    with pytest.raises(ValueError):
-        trace_paths(norm, strategy="bogus")
 
 
 def test_service_components_multi_component_graph(spark):

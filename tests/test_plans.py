@@ -318,10 +318,9 @@ def test_mixing_plan_single_aggregate_no_join(spark):
 
 
 def test_trace_paths_joins_are_narrow_and_bounded(spark):
-    """Pointer doubling: the path build is a fixed number of self-joins of
-    a narrow (trace, id, ptr, seg) frame — no CartesianProduct, no
-    nested-loop join anywhere, and the top-k is TakeOrdered (no global
-    sort of the counts)."""
+    """The path build is one trace_key exchange and one mapInPandas chain
+    walk — no CartesianProduct, no nested-loop join anywhere, and the
+    top-k is TakeOrdered (no global sort of the counts)."""
     import __spark_entry__ as e
 
     plan = formatted(e.q_top_trace_paths(spark, SF))

@@ -81,11 +81,11 @@ def test_flagship_at_10x_replicated_sf01(spark):
 
 
 def test_path_build_at_10x_replicated_sf01(spark):
-    """The pointer-doubling path table at 7.5M spans (the sf1 tier's
-    worst wall ratio): replicas preserve service names, so every path's
-    occurrence count must be exactly 10× the base — and the build must
-    sustain a throughput floor (conservative: >150k spans/s end-to-end
-    including the leaf anti-join and count aggregation)."""
+    """The kernel path table at 7.5M spans (the sf1 tier's worst wall
+    ratio): replicas preserve service names, so every path's occurrence
+    count must be exactly 10× the base — and the build must sustain a
+    throughput floor (conservative: >150k spans/s end-to-end including
+    the chain walk and count aggregation)."""
     import time
 
     from zipkin_dependencies_spark.functions import normalize_spans

@@ -24,22 +24,27 @@ regenerate with `python tools/gen_queries_md.py`.
 """
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's text: HEADER, then one row per queries() entry."""
     spec = importlib.util.spec_from_file_location(
         "se", os.path.join(ROOT, "__spark_entry__.py")
     )
     se = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(se)
-    qs = se.queries()
     rows = []
-    for name, fn in qs.items():
+    for name, fn in se.queries().items():
         doc = re.sub(r"\s+", " ", (fn.__doc__ or "").strip())
         doc = doc.replace("|", "\\|")
         rows.append(f"| `{name}` | {doc} |")
-    out = HEADER + "\n".join(rows) + "\n"
+    return HEADER + "\n".join(rows) + "\n"
+
+
+def main() -> None:
+    out = render()
     with open(os.path.join(ROOT, "QUERIES.md"), "w") as fh:
         fh.write(out)
-    print(f"wrote QUERIES.md: {len(rows)} rows")
+    n_rows = out.count("\n| `")
+    print(f"wrote QUERIES.md: {n_rows} rows")
 
 
 if __name__ == "__main__":

@@ -5,8 +5,9 @@ The Spark-native replacement for the reference's
 (main/src/main/java/zipkin2/dependencies/ZipkinDependenciesJob.java:21-87).
 Environment surface (see config.engine_env): STORAGE_TYPE picks the parity
 profile, SPANS_PATH/LINKS_PATH the storage locations, SPAN_FORMAT the source
-adapter (parquet|json|v1), DAY_FILTER/STRICT_TRACE_ID override the profile,
-SPARK_MASTER/SPARK_CONF/ZIPKIN_LOG_LEVEL the session.
+adapter (parquet|json|v1|es|cassandra|mysql), LINKS_SINK=backend writes the
+links back through a live format's connector, DAY_FILTER/STRICT_TRACE_ID
+override the profile, SPARK_MASTER/SPARK_CONF/ZIPKIN_LOG_LEVEL the session.
 """
 
 from __future__ import annotations
@@ -70,6 +71,9 @@ def main(argv: list[str] | None = None) -> int:
     clustered_scan = False
     start_us = env.day_ms * 1000
     end_us = start_us + 86_400_000_000 - 1
+    flavor = (
+        "opensearch" if environ.get("STORAGE_TYPE") == "opensearch" else "elasticsearch"
+    )
     # the v1 sources (parquet tables, live mysql) apply the F1 window in
     # their scan, as the reference's pushed WHERE s.start_ts BETWEEN does;
     # their spans carry no timestamp, so the job must not filter again
@@ -88,11 +92,6 @@ def main(argv: list[str] | None = None) -> int:
     elif env.source_format == "es":
         from .sources.backends import es_conf_from_env, read_spans_es
 
-        flavor = (
-            "opensearch"
-            if environ.get("STORAGE_TYPE") == "opensearch"
-            else "elasticsearch"
-        )
         spans_df = read_spans_es(
             spark,
             day,
@@ -122,7 +121,7 @@ def main(argv: list[str] | None = None) -> int:
             start_us=start_us,
             end_us=end_us,
         )
-    else:
+    else:  # parquet (engine_env rejects any other SPAN_FORMAT)
         spans_df = read_spans_parquet(spark, env.spans_path)
 
     job = DependencyLinksJob(
@@ -137,15 +136,10 @@ def main(argv: list[str] | None = None) -> int:
         ),
     )
     links = job.run(spans_df)
-    if environ.get("LINKS_SINK") == "backend":
+    if environ.get("LINKS_SINK") == "backend":  # engine_env checked the format
         from .sources import backends as _b
 
         if env.source_format == "es":
-            flavor = (
-                "opensearch"
-                if environ.get("STORAGE_TYPE") == "opensearch"
-                else "elasticsearch"
-            )
             _b.write_links_es(
                 links, day,
                 index_prefix=environ.get("ES_INDEX", "zipkin"),
@@ -157,7 +151,7 @@ def main(argv: list[str] | None = None) -> int:
             _b.write_links_cassandra(
                 links, day, keyspace=environ.get("CASSANDRA_KEYSPACE", "zipkin2")
             )
-        elif env.source_format == "mysql":
+        else:
             _b.write_links_mysql(links, day, _b.mysql_config_from_env(environ))
         log.info("Wrote day=%s back to %s", day, env.source_format)
     elif env.links_path is None:

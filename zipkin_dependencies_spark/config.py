@@ -193,7 +193,7 @@ class EngineEnv:
     day_ms: int                       # UTC-midnight epoch millis
     spans_path: str
     links_path: str | None
-    source_format: str                # parquet | json | v1
+    source_format: str                # parquet | json | v1 | es | cassandra | mysql
     day_filter: DayFilter
     strict_trace_id: bool
     master: str
@@ -209,6 +209,11 @@ _PROFILE = {  # STORAGE_TYPE → (day-filter parity, strict default honored)
     "spark": (DayFilter.TRACE_ROOT, True),  # native profile
 }
 
+#: SPAN_FORMAT values: self-contained file formats, then the live stores
+#: whose connectors can also take the links back (LINKS_SINK=backend)
+_FILE_FORMATS = ("parquet", "json", "v1")
+_LIVE_FORMATS = ("es", "cassandra", "mysql")
+
 
 def engine_env(
     environ: dict[str, str] | None = None,
@@ -220,12 +225,25 @@ def engine_env(
     midnight; STORAGE_TYPE dispatch (:45-54) becomes a parity profile;
     STRICT_TRACE_ID defaults true (CassandraDependenciesJob.java:65) but only
     profiles that honor it apply it (ES grouping is always lenient,
-    ElasticsearchDependenciesJob.java:181)."""
+    ElasticsearchDependenciesJob.java:181). An unknown STORAGE_TYPE,
+    SPAN_FORMAT or LINKS_SINK raises ValueError, as does LINKS_SINK=backend
+    with a file format, which has no connector to write through."""
     env = os.environ if environ is None else environ
     storage = env.get("STORAGE_TYPE", "spark")
     if storage not in _PROFILE:
         raise ValueError(f"unsupported STORAGE_TYPE: {storage}")
     day_filter, honors_strict = _PROFILE[storage]
+    source_format = env.get("SPAN_FORMAT", "parquet")
+    if source_format not in _FILE_FORMATS + _LIVE_FORMATS:
+        raise ValueError(f"unsupported SPAN_FORMAT: {source_format}")
+    links_sink = env.get("LINKS_SINK") or None
+    if links_sink not in (None, "backend"):
+        raise ValueError(f"unsupported LINKS_SINK: {links_sink}")
+    if links_sink == "backend" and source_format not in _LIVE_FORMATS:
+        raise ValueError(
+            f"LINKS_SINK=backend needs a live SPAN_FORMAT "
+            f"({' | '.join(_LIVE_FORMATS)}), not {source_format}"
+        )
 
     if day_arg is not None:
         day_ms = parse_day(day_arg)
@@ -241,7 +259,7 @@ def engine_env(
         day_ms=day_ms,
         spans_path=env.get("SPANS_PATH", "spans"),
         links_path=env.get("LINKS_PATH") or None,
-        source_format=env.get("SPAN_FORMAT", "parquet"),
+        source_format=source_format,
         day_filter=DayFilter(env["DAY_FILTER"]) if "DAY_FILTER" in env else day_filter,
         strict_trace_id=strict and honors_strict,
         master=env.get("SPARK_MASTER", "local[*]"),

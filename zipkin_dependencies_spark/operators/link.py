@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from ..linker import DependencyLinker, Span, trace_in_day_window
 from ..schemas import TRACE_LINKS_SCHEMA
+from .aggregate import aggregate_links
 
 #: fraction of spans the seeded heavy-trace pre-pass samples (see
 #: ``_heavy_trace_keys``)
@@ -317,8 +318,6 @@ def links_from_spans(
     grouping shuffle (G1 parity). isolate_heavy_over=N: route giant traces
     to dedicated partitions (skew isolation — must never change the result,
     only the placement)."""
-    from .aggregate import aggregate_links
-
     return aggregate_links(
         trace_links_partitioned(
             normalized_spans,
@@ -380,11 +379,4 @@ def links_from_spans_two_phase(
     )
     giant_links = links_from_spans_hybrid(tagged.filter(F.col("_giant")).drop("_giant"))
     normal_links = links_from_spans(tagged.filter(F.col("_giant").isNull()).drop("_giant"))
-    return (
-        giant_links.unionByName(normal_links)
-        .groupBy("parent", "child")
-        .agg(
-            F.sum("call_count").alias("call_count"),
-            F.sum("error_count").alias("error_count"),
-        )
-    )
+    return aggregate_links(giant_links.unionByName(normal_links))

@@ -183,9 +183,7 @@ def _with_tree(s: DataFrame) -> DataFrame:
     )
 
 
-def eligible_trace_keys(
-    normalized_spans: DataFrame, max_depth: int = MAX_DEPTH
-) -> DataFrame:
+def eligible_trace_keys(normalized_spans: DataFrame) -> DataFrame:
     """→ single-column frame of trace_keys the relational path may own.
 
     The tree frame is materialized (localCheckpoint) before the bounded
@@ -205,8 +203,8 @@ def eligible_trace_keys(
 
     # E4: depth-bounded reachability by POINTER DOUBLING — after round r a
     # span's pointer is its 2^r-th resolved ancestor and `reached` proves
-    # the root lies within 2^r - 1 hops, so ceil(log2(max_depth+1)) rounds
-    # prove depth max_depth (7 joins for 64 vs 64 for the old one-hop
+    # the root lies within 2^r - 1 hops, so ceil(log2(MAX_DEPTH+1)) rounds
+    # prove depth MAX_DEPTH (7 joins for 64 vs 64 for the old one-hop
     # unroll). Spans still unreached after the walk are in a cycle or
     # deeper than the bound. Formulated WITHOUT unions (a union of
     # checkpointed frames trips a Catalyst constraint-rewrite bug in 4.1:
@@ -225,11 +223,11 @@ def eligible_trace_keys(
         .dropDuplicates(["trace_key", "id", "shared"])
         .localCheckpoint(eager=True)
     )
-    for _ in range(max(1, math.ceil(math.log2(max_depth + 1)))):
+    for _ in range(max(1, math.ceil(math.log2(MAX_DEPTH + 1)))):
         # early exit: a span still mattering to the walk is unreached WITH
         # a live pointer; once none remain (every span reached the root or
         # got stuck on a broken chain) further rounds are no-ops — a
-        # depth-2 production forest pays ONE round, not log2(max_depth)
+        # depth-2 production forest pays ONE round, not log2(MAX_DEPTH)
         if cur.filter(
             ~F.col("reached") & F.col("ptr_id").isNotNull()
         ).isEmpty():
@@ -406,22 +404,18 @@ def trace_links_relational(normalized_spans: DataFrame) -> DataFrame:
     )
 
 
-def links_from_spans_hybrid(
-    normalized_spans: DataFrame, max_depth: int = MAX_DEPTH
-) -> DataFrame:
+def links_from_spans_hybrid(normalized_spans: DataFrame) -> DataFrame:
     """Route each trace to the cheapest correct path: relational for the
     eligible majority (all-JVM, codegen), kernel for the rest. The union is
     exact: both paths implement the same contract, and the randomized
-    cross-check pins hybrid == kernel on arbitrary forests. ``max_depth``
+    cross-check pins hybrid == kernel on arbitrary forests. ``MAX_DEPTH``
     bounds the E4 acyclicity proof (rounds grow as log2 of it)."""
     from .aggregate import aggregate_links
     from .link import trace_links_partitioned
 
     # the key set is trace-cardinality and feeds BOTH branch filters —
     # materialize it once so neither branch replans the eligibility DAG
-    ok = eligible_trace_keys(
-        normalized_spans, max_depth=max_depth
-    ).localCheckpoint(eager=True)
+    ok = eligible_trace_keys(normalized_spans).localCheckpoint(eager=True)
     tagged = normalized_spans.join(
         ok.withColumn("_fast", F.lit(True)), "trace_key", "left_outer"
     )
@@ -429,11 +423,4 @@ def links_from_spans_hybrid(
     slow = aggregate_links(
         trace_links_partitioned(tagged.filter(F.col("_fast").isNull()).drop("_fast"))
     )
-    return (
-        fast.unionByName(slow)
-        .groupBy("parent", "child")
-        .agg(
-            F.sum("call_count").alias("call_count"),
-            F.sum("error_count").alias("error_count"),
-        )
-    )
+    return aggregate_links(fast.unionByName(slow))

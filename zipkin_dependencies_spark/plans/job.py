@@ -40,7 +40,6 @@ class JobConfig:
     #   default; None: the source already applied the day window (the v1
     #   sources' pushed F1 scan predicate)
     strict_trace_id: bool = False            # G1 vs G2/G3 grouping
-    dedupe: bool = True                      # D1 span dedup before grouping
     clustered: bool = False                  # input already trace-co-located
     #   (bucketed table, or a strict-mode Cassandra token-range scan —
     #   sources/backends.py::cassandra_scan_is_trace_clustered): the linker
@@ -67,7 +66,7 @@ class DependencyLinksJob:
             spans = filter_span_window(spans, start_us, end_us)  # F1: pushed
 
         normalized = normalize_spans(spans, strict_trace_id=cfg.strict_trace_id)
-        if cfg.dedupe and not cfg.clustered:
+        if not cfg.clustered:
             # D1 is a shuffle-shrinking optimization whose dropDuplicates
             # exchange would destroy the declared co-location; the linker
             # kernel's tree merge makes exact duplicates harmless (see

@@ -139,6 +139,25 @@ def test_write_is_idempotent_per_day(spark, spans_df_factory, tmp_path):
     assert first[0].day == DAY
 
 
+def test_empty_rerun_clears_the_day(spark, tmp_path):
+    """Re-running a day that now has no links empties that day's partition
+    (it keeps its schema) and leaves the other days alone."""
+    from zipkin_dependencies_spark.sinks import write_links
+
+    out = str(tmp_path / "links")
+    schema = "parent string, child string, call_count long, error_count long"
+    day = dt.date(2024, 3, 14)
+    write_links(spark.createDataFrame([("a", "b", 3, 1)], schema), out, day)
+    write_links(
+        spark.createDataFrame([("c", "d", 1, 0)], schema), out,
+        day + dt.timedelta(days=1),
+    )
+    write_links(spark.createDataFrame([], schema), out, day)
+    rows = {(str(r.day), r.parent) for r in spark.read.parquet(out).collect()}
+    assert rows == {("2024-03-15", "c")}
+    assert spark.read.parquet(f"{out}/day=2024-03-14").count() == 0
+
+
 def test_multi_day_write_keeps_other_partitions(spark, spans_df_factory, tmp_path):
     out = str(tmp_path / "links")
     d1 = spans_df_factory(

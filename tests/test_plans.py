@@ -72,6 +72,64 @@ def test_linker_pipeline_has_single_span_exchange(spark):
     assert len(above) == 1  # exactly the A2 aggregate's link-sized exchange
 
 
+def _plan_nodes(plan):
+    """Pre-order walk of a physical plan, stepping into query stages."""
+    yield plan
+    if plan.nodeName() in ("ShuffleQueryStage", "ResultQueryStage"):
+        yield from _plan_nodes(plan.plan())
+        return
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _repartition_exchanges(df):
+    """→ [(origin, numPartitions)] of the df's user-requested exchanges."""
+    plan = df._jdf.queryExecution().executedPlan().executedPlan()
+    return [
+        (n.shuffleOrigin().toString(), n.numPartitions())
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "Exchange" and "REPARTITION" in n.shuffleOrigin().toString()
+    ]
+
+
+def test_kernel_exchanges_start_per_core_and_aqe_coalesces_them(spark):
+    """Both Python kernels' span exchanges (the flagship linker's and
+    trace_paths') are column-only repartitions: they start at one
+    partition per core or more even when spark.sql.shuffle.partitions is
+    narrower (session.get_spark's floor), and AQE coalesces them."""
+    import __spark_entry__ as e
+    from zipkin_dependencies_spark.functions import normalize_spans
+    from zipkin_dependencies_spark.operators.paths import trace_paths
+    from zipkin_dependencies_spark.session import get_spark, scoped_conf
+    from zipkin_dependencies_spark.testdata import derived_spans
+
+    cores = spark.sparkContext.defaultParallelism
+    narrow = max(1, cores // 2)
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(narrow)}):
+        try:
+            # re-applies the factory's settings to the running session
+            assert get_spark(shuffle_partitions=narrow) is spark
+            for df in (
+                e.q_dependency_links(spark, SF),
+                trace_paths(normalize_spans(derived_spans(spark, SF))),
+            ):
+                [(origin, width)] = _repartition_exchanges(df)
+                assert origin == "REPARTITION_BY_COL"
+                assert width >= cores
+                df.collect()
+                final = df._jdf.queryExecution().executedPlan().executedPlan()
+                reads = [
+                    n for n in _plan_nodes(final)
+                    if n.nodeName() == "AQEShuffleRead"
+                    and n.child().plan().shuffleOrigin().toString() == origin
+                ]
+                assert len(reads) == 1 and reads[0].isCoalescedRead()
+        finally:
+            spark.conf.unset(initial)
+
+
 def test_heavy_isolation_broadcasts_the_heavy_key_set(spark):
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.link import trace_links_partitioned

@@ -74,9 +74,7 @@ def test_heavy_isolation_matches_default(spark, skewed_spans):
     base = _links(aggregate_links(trace_links_partitioned(skewed_spans)))
     isolated = _links(
         aggregate_links(
-            trace_links_partitioned(
-                skewed_spans, num_partitions=8, isolate_heavy_over=1_000
-            )
+            trace_links_partitioned(skewed_spans, isolate_heavy_over=1_000)
         )
     )
     assert base == isolated

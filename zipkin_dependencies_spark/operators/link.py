@@ -29,7 +29,7 @@ from typing import Iterable, Iterator, Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -123,18 +123,6 @@ def _joined(chunks: list[list]) -> list:
     return [np.concatenate(parts) for parts in zip(*chunks)]
 
 
-def _kernel_partitions(spark: SparkSession) -> int:
-    """Partition count of a Python-kernel stage. AQE sizes post-shuffle
-    partitions by BYTES, which under-parallelizes a Python-cost-bound stage
-    (spans are narrow; per-byte kernel cost is high). Floor at the
-    cluster's core count so every core works; at real scale raise
-    ``spark.sql.shuffle.partitions`` to ~2-4× cores for stragglers."""
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
-
-
 def _heavy_trace_keys(df: DataFrame, group_cols: list[str], over: int) -> DataFrame:
     """→ the ``group_cols`` of every group with more than ``over`` rows.
 
@@ -159,7 +147,6 @@ def _heavy_trace_keys(df: DataFrame, group_cols: list[str], over: int) -> DataFr
 def trace_links_partitioned(
     normalized_spans: DataFrame,
     window: tuple[int, int] | None = None,
-    num_partitions: int | None = None,
     day_col: str | None = None,
     isolate_heavy_over: int | None = None,
     clustered: bool = False,
@@ -182,6 +169,15 @@ def trace_links_partitioned(
       combiner, done one stage earlier than Catalyst's partial aggregate.
     - skew: a giant trace still lands on one task, but costs only its own
       O(n) linking, with no per-trace setup tax.
+
+    Width: the exchange is a column-only ``repartition``, so AQE sizes it.
+    It starts at ``spark.sql.shuffle.partitions`` hash partitions
+    (``session.get_spark`` raises the start to one per core) and AQE's
+    default ``parallelismFirst`` coalescing merges neighbours into
+    partitions of max(min(64 MB, shuffle bytes / defaultParallelism),
+    1 MB): a small day runs about one Python task per core, a large day
+    64 MB tasks. Coalescing only merges whole hash partitions, so a trace
+    never splits and the result stays placement-independent.
 
     ``window=(start_us, end_us)`` enables the F2 per-trace root-timestamp
     filter *inside* the kernel — zero extra shuffle, exactly where the
@@ -263,13 +259,11 @@ def trace_links_partitioned(
         ]
         yield pd.DataFrame(rows, columns=out_cols)
 
-    if num_partitions is None:
-        num_partitions = _kernel_partitions(normalized_spans.sparkSession)
     df = normalized_spans
     if isolate_heavy_over:
         # broadcast the heavy-key set into a routing column. Light traces
-        # route by their group hash; each heavy trace routes by its own
-        # key ⇒ lands alone.
+        # route by their group key, each heavy trace by its own "H:" key;
+        # AQE leaves a giant's partition unmerged while light ones coalesce
         gk = F.concat_ws("|", *group_cols)
         heavy = _heavy_trace_keys(df, group_cols, isolate_heavy_over).select(
             gk.alias("__gk")
@@ -282,14 +276,12 @@ def trace_links_partitioned(
             )
             .withColumn(
                 "__route",
-                F.when(F.col("__heavy"), F.concat(F.lit("H:"), gk)).otherwise(
-                    F.pmod(F.hash(gk), F.lit(num_partitions)).cast("string")
-                ),
+                F.when(F.col("__heavy"), F.concat(F.lit("H:"), gk)).otherwise(gk),
             )
             .drop("__gk", "__heavy")
         )
         return (
-            df.repartition(num_partitions, "__route")
+            df.repartition("__route")
             .sortWithinPartitions(*order_cols)
             .drop("__route")
             .mapInPandas(link_partition, schema=schema)
@@ -301,7 +293,7 @@ def trace_links_partitioned(
             link_partition, schema=schema
         )
     return (
-        df.repartition(num_partitions, *group_cols)
+        df.repartition(*group_cols)
         .sortWithinPartitions(*order_cols)
         .mapInPandas(link_partition, schema=schema)
     )

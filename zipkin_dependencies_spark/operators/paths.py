@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..memo import register_memo
-from .link import _kernel_partitions, _sorted_groups
+from .link import _sorted_groups
 
 MAX_DEPTH = 127
 
@@ -99,8 +99,9 @@ def trace_paths(
 
     Plan: project the 4 consumed columns (the mapInPandas boundary is
     opaque to column pruning — guide §4.1), ONE repartition by trace_key
-    at the linker's Python-kernel width (``_kernel_partitions``),
-    in-partition sort for contiguous traces, one Arrow pass."""
+    that AQE sizes as it sizes the linker's (see
+    ``link.trace_links_partitioned``), in-partition sort for contiguous
+    traces, one Arrow pass."""
     spark = normalized_spans.sparkSession
     if memo_key is not None:
         hit = _PATH_MEMO.get(memo_key)
@@ -113,7 +114,7 @@ def trace_paths(
             "parent_id",
             F.coalesce(F.col("local_service"), F.lit("(unknown)")).alias("svc"),
         )
-        .repartition(_kernel_partitions(spark), "trace_key")
+        .repartition("trace_key")
         .sortWithinPartitions("trace_key")
         .mapInPandas(
             _paths_walker,

@@ -65,8 +65,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # idempotent day re-runs: overwrite only the partitions being written
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # don't let tiny local files explode task counts; at cluster scale the
-        # default 128m is right, local tests override nothing
+        # the pre-coalesce width of every shuffle: AQE merges its hash
+        # partitions by size at run time (per-core floor below). Scan split
+        # size is spark.sql.files.maxPartitionBytes (128m default), unset here
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         # the driver-generated events parquet stores TIMESTAMP(NANOS) which
         # Spark has no native type for — read as long, convert at the source
@@ -84,4 +85,15 @@ def get_spark(
         builder = builder.config("spark.executorEnv.ZIPKIN_LOG_LEVEL", log_level)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # the Python kernels' exchanges are column-only repartitions AQE sizes
+    # (operators/link.py::trace_links_partitioned): start them at one
+    # partition per core at least, unless the caller chose a start width
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    cores = spark.sparkContext.defaultParallelism
+    if (
+        spark.conf.get(initial, None) is None
+        and cores > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ):
+        spark.conf.set(initial, str(cores))
+    return spark

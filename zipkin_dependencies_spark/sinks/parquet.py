@@ -14,27 +14,33 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
 def write_links(links: DataFrame, path: str, day: dt.date) -> None:
     """Stamp the day (P8/W1 write-time column) and overwrite that partition.
 
-    Empty input still short-circuits like the reference (F5): dynamic
-    overwrite of zero rows would leave the old partition in place, which is
-    NOT what a re-run over now-empty data should do — so we overwrite with an
-    explicit empty day partition to keep re-run semantics honest.
+    Dynamic overwrite of zero rows writes nothing and so would leave the old
+    partition in place, which is NOT what a re-run over now-empty data
+    should do. The write counts its rows as it goes (an observed metric, no
+    extra job); when there were none, the day's partition is overwritten
+    with an empty one, so the table keeps its schema.
     """
-    stamped = links.select(
-        F.lit(day).cast("date").alias("day"),
+    columns = [
         F.col("parent"),
         F.col("child"),
         F.col("call_count").cast("long"),
         F.col("error_count").cast("long"),
-    )
+    ]
+    written = Observation()
     (
-        stamped.write.mode("overwrite")
+        links.select(F.lit(day).cast("date").alias("day"), *columns)
+        .observe(written, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
         .partitionBy("day")
         .parquet(path)
     )
+    if written.get["rows"] == 0:
+        empty = links.limit(0).select(*columns)
+        empty.write.mode("overwrite").parquet(f"{path}/day={day.isoformat()}")

@@ -1,21 +1,49 @@
 """Linker scenario corpus — mirrors the [EXT] ITDependencies behavioral suite
-(SURVEY §5 layer 2, FIXTURES.md §F4). Pure Python, no Spark."""
+(SURVEY §5 layer 2, FIXTURES.md §F4). Pure Python, no Spark.
+
+Every case runs through both linkers: the ``Span`` object model
+(``link_trace``, the oracle) and the column kernel the Spark operators run
+(``link_columns``); ``links_of`` and ``in_window`` assert they agree."""
 
 from __future__ import annotations
 
 from zipkin_dependencies_spark.linker import (
     DependencyLinker,
     Span,
+    link_columns,
     link_trace,
+    roots_in_day_window,
     trace_in_day_window,
 )
 
+#: ``link_columns``' arguments, as ``Span`` fields
+LINK_FIELDS = (
+    "parent_id", "id", "kind", "local_service", "remote_service", "shared", "is_error",
+)
+
+
+def columns_of(spans) -> list[list]:
+    """One trace's spans → ``link_columns``' column lists."""
+    return [[getattr(s, f) for s in spans] for f in LINK_FIELDS]
+
 
 def links_of(spans):
-    return {
-        (l["parent"], l["child"]): (l["call_count"], l["error_count"])
-        for l in DependencyLinker().put_trace(spans).link()
-    }
+    def table(linker):
+        return {
+            (l["parent"], l["child"]): (l["call_count"], l["error_count"])
+            for l in linker.link()
+        }
+
+    want = table(DependencyLinker().put_trace(spans))
+    assert table(DependencyLinker().put_links(link_columns(*columns_of(spans)))) == want
+    return want
+
+
+def in_window(spans, start_ts, end_ts) -> bool:
+    want = trace_in_day_window(spans, start_ts, end_ts)
+    parents, stamps = [s.parent_id for s in spans], [s.timestamp for s in spans]
+    assert roots_in_day_window(parents, stamps, start_ts, end_ts) == want
+    return want
 
 
 T = "000000000000000a"
@@ -168,15 +196,16 @@ def test_f4_11c_error_count_le_call_count():
         Span(trace_id="000000000000000b", id="9", kind="CLIENT",
              local_service="a", remote_service="b"),
     ]
+    want = [{"parent": "a", "child": "b", "call_count": 2, "error_count": 1}]
+    links = DependencyLinker().put_trace([spans[0]]).put_trace([spans[1]]).link()
+    assert links == want
     links = (
         DependencyLinker()
-        .put_trace([spans[0]])
-        .put_trace([spans[1]])
+        .put_links(link_columns(*columns_of([spans[0]])))
+        .put_links(link_columns(*columns_of([spans[1]])))
         .link()
     )
-    assert links == [
-        {"parent": "a", "child": "b", "call_count": 2, "error_count": 1}
-    ]
+    assert links == want
 
 
 def test_f4_12_duplicate_spans_dedupe_in_tree_merge():
@@ -223,6 +252,7 @@ def test_unnamed_endpoints_skipped():
 
 def test_empty_trace():
     assert link_trace([]) == []
+    assert link_columns(*columns_of([])) == []
 
 
 # --- F2 day-window semantics (scenario 6) -----------------------------------
@@ -235,17 +265,17 @@ def test_f4_6_root_ts_outside_window_drops_trace():
         Span(trace_id=T, id="1", kind="SERVER", local_service="a",
              remote_service="b", timestamp=DAY_US * 2),
     ]
-    assert not trace_in_day_window(spans, DAY_US * 3, DAY_US * 4 - 1)
-    assert trace_in_day_window(spans, DAY_US * 2, DAY_US * 3 - 1)
+    assert not in_window(spans, DAY_US * 3, DAY_US * 4 - 1)
+    assert in_window(spans, DAY_US * 2, DAY_US * 3 - 1)
 
 
 def test_f4_6b_zero_or_missing_root_ts_drops_trace():
-    assert not trace_in_day_window(
+    assert not in_window(
         [Span(trace_id=T, id="1", timestamp=0)], 0, DAY_US)
-    assert not trace_in_day_window(
+    assert not in_window(
         [Span(trace_id=T, id="1", timestamp=None)], 0, DAY_US)
 
 
 def test_f4_6c_headless_trace_passes_window():
     spans = [Span(trace_id=T, id="2", parent_id="1", timestamp=5)]
-    assert trace_in_day_window(spans, DAY_US, DAY_US * 2)
+    assert in_window(spans, DAY_US, DAY_US * 2)

@@ -3,19 +3,24 @@
 
 Hypothesis generates random span forests; the invariants hold for EVERY
 trace the reference could encounter, not just the curated scenario corpus in
-test_linker.py. No Spark involved — this pins the kernel the Arrow operator
-wraps (operators/link.py).
+test_linker.py. No Spark involved — this pins the column kernel the Arrow
+operator runs (operators/link.py) to the ``Span`` oracle.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.test_linker import columns_of
 from zipkin_dependencies_spark.linker import (
     DependencyLinker,
     Span,
+    link_columns,
     link_trace,
+    roots_in_day_window,
     trace_in_day_window,
 )
 
@@ -25,17 +30,18 @@ KINDS = [None, "CLIENT", "SERVER", "PRODUCER", "CONSUMER", "bogus"]
 
 @st.composite
 def traces(draw, max_spans: int = 12):
-    """A random single-trace span list: ids s0..sN, parents drawn from earlier
-    ids / None / a dangling id (headless), random kinds/endpoints/flags."""
+    """A random single-trace span list: ids s0..sN or null, parents drawn
+    from every id / None / a dangling id (headless traces and parent
+    cycles), random kinds/endpoints/flags."""
     n = draw(st.integers(min_value=1, max_value=max_spans))
+    ids = [None] + [f"s{j}" for j in range(n)]
     spans = []
-    for i in range(n):
-        parent_choices = [None, "dangling"] + [f"s{j}" for j in range(i)]
+    for _ in range(n):
         spans.append(
             Span(
                 trace_id="t",
-                id=f"s{draw(st.integers(0, n - 1))}",  # collisions ⇒ merges
-                parent_id=draw(st.sampled_from(parent_choices)),
+                id=draw(st.sampled_from(ids)),  # collisions ⇒ merges
+                parent_id=draw(st.sampled_from([*ids, "dangling"])),
                 kind=draw(st.sampled_from(KINDS)),
                 local_service=draw(st.sampled_from(SERVICES)),
                 remote_service=draw(st.sampled_from(SERVICES)),
@@ -47,6 +53,20 @@ def traces(draw, max_spans: int = 12):
             )
         )
     return spans
+
+
+@given(traces())
+@settings(max_examples=1000, deadline=None)
+def test_column_kernel_matches_span_linker(spans):
+    assert Counter(link_columns(*columns_of(spans))) == Counter(link_trace(spans))
+
+
+@given(traces(), st.integers(0, 2**40), st.integers(0, 2**40))
+@settings(max_examples=300, deadline=None)
+def test_column_window_matches_span_window(spans, a, b):
+    lo, hi = min(a, b), max(a, b)
+    parents, stamps = [s.parent_id for s in spans], [s.timestamp for s in spans]
+    assert roots_in_day_window(parents, stamps, lo, hi) == trace_in_day_window(spans, lo, hi)
 
 
 @given(traces())

@@ -1,8 +1,10 @@
 """Per-trace dependency linking — the semantic core of the engine.
 
-Pure Python, no Spark imports: this module is the unit-testable kernel that the
-sorted-stream ``mapInPandas`` operator (``operators/link.py``) runs once per
-trace of each repartitioned, sorted partition. Semantics
+Pure Python, no Spark imports: this module is the unit-testable kernel.
+``link_columns`` is what the sorted-stream ``mapInPandas`` operator
+(``operators/link.py``) runs once per trace of each repartitioned, sorted
+partition; the ``Span`` object model (``build_tree``, ``link_trace``,
+``DependencyLinker.put_trace``) is the reference it is tested against. Semantics
 re-implement the behavior of the external ``zipkin2.internal.DependencyLinker``
 + ``zipkin2.internal.SpanNode`` (zipkin 3.6.0) as invoked by the reference at:
 
@@ -287,6 +289,172 @@ def link_trace(spans: Iterable[Span]) -> list[tuple]:
     return out
 
 
+def link_columns(
+    parent_id: list,
+    id: list,
+    kind: list,
+    local_service: list,
+    remote_service: list,
+    shared: list,
+    is_error: list,
+) -> list[tuple]:
+    """``link_trace`` on one trace's column lists, without ``Span`` objects.
+
+    Row ``j`` of the lists is one span report: strings or None, flags
+    ``bool``. Returns exactly ``link_trace``'s triples in its order; the
+    tree is integer slots (one per merged ``(id, shared)`` span, plus slot
+    ``m`` for a synthetic root) instead of ``_Node`` objects."""
+    n = len(id)
+    if n == 0:
+        return []
+    slot_of = dict(zip(zip(id, shared), range(n)))
+    if len(slot_of) == n:  # no duplicate reports: the rows are the slots
+        par, ids, kinds, local, remote, shr, err = (
+            parent_id, id, kind, local_service, remote_service, shared, is_error,
+        )
+    else:  # merge duplicates into the first report's slot (_merge_spans)
+        slot_of = {}
+        par, ids, kinds, local, remote, shr, err = [], [], [], [], [], [], []
+        for p, i, k, ls, rs, sh, er in zip(
+            parent_id, id, kind, local_service, remote_service, shared, is_error
+        ):
+            s = slot_of.get((i, sh))
+            if s is None:
+                slot_of[(i, sh)] = len(ids)
+                par.append(p)
+                ids.append(i)
+                kinds.append(k)
+                local.append(ls)
+                remote.append(rs)
+                shr.append(sh)
+                err.append(er)
+            else:
+                par[s] = par[s] or p
+                kinds[s] = kinds[s] or k
+                local[s] = local[s] or ls
+                remote[s] = remote[s] or rs
+                err[s] = err[s] or er
+    m = len(ids)
+
+    # root: the first non-shared slot without a parent id, else synthetic
+    root = m
+    for s in range(m):
+        if par[s] is None and not shr[s]:
+            root = s
+            break
+    up = [-1] * (m + 1)
+    kids: list[list[int]] = [[] for _ in range(m + 1)]
+    get = slot_of.get
+    for s in range(m):
+        if s == root:
+            continue
+        p, i = par[s], ids[s]
+        # build_tree's candidate order; a candidate equal to the slot's own
+        # key is skipped
+        a = None
+        if shr[s]:
+            if i is not None:
+                a = get((i, False))
+            if a is None and p is not None:
+                if p != i:
+                    a = get((p, True))
+                if a is None:
+                    a = get((p, False))
+        elif p is not None:
+            a = get((p, True))
+            if a is None and p != i:
+                a = get((p, False))
+        if a is None:
+            a = root
+        up[s] = a
+        kids[a].append(s)
+
+    order = [root]
+    for x in order:  # BFS: the list grows while it is walked
+        order.extend(kids[x])
+    if len(order) < m + (root == m):
+        # a parent cycle left slots unreachable: re-attach each to the root
+        seen = [False] * (m + 1)
+        for x in order:
+            seen[x] = True
+        for s in range(m):
+            if seen[s]:
+                continue
+            kids[up[s]].remove(s)
+            up[s] = root
+            kids[root].append(s)
+            stack = [s]
+            while stack:
+                x = stack.pop()
+                seen[x] = True
+                stack.extend(c for c in kids[x] if not seen[c])
+        order = [root]
+        for x in order:
+            order.extend(kids[x])
+
+    out: list[tuple] = []
+    anc = [-1] * (m + 1)  # nearest non-local ancestor slot, -1 if none
+    for s in order:
+        if s == m:
+            continue  # synthetic root: its children have no ancestor
+        children = kids[s]
+        if children:
+            a = s if kinds[s] is not None or remote[s] is not None else anc[s]
+            for c in children:
+                anc[c] = a
+        kind_s = kinds[s]
+        if kind_s not in VALID_KINDS:
+            kind_s = None
+        service, remote_s = local[s], remote[s]
+        if kind_s is None:
+            if service is None or remote_s is None:
+                continue  # purely local span
+            kind_s = "CLIENT"
+        if kind_s == "SERVER" or kind_s == "CONSUMER":
+            child_name, parent_name = service, remote_s
+            if parent_name is None and (s == root or up[s] == m):
+                continue  # root-most span: its caller is outside the trace
+        else:
+            parent_name, child_name = service, remote_s
+        is_err = err[s]
+        if kind_s == "PRODUCER" or kind_s == "CONSUMER":
+            if parent_name is not None and child_name is not None:
+                out.append((parent_name, child_name, is_err))
+            continue
+        sid = ids[s]
+        if kind_s == "CLIENT":
+            deferred = False
+            for c in children:
+                if kinds[c] == "SERVER" and (
+                    (shr[c] and ids[c] == sid) or (par[c] is not None and par[c] == sid)
+                ):
+                    deferred = True  # the same RPC's server half names the link
+                    break
+            if deferred:
+                continue
+        a = anc[s]
+        if a >= 0:
+            anc_name = local[a]
+            if anc_name is not None:
+                if kind_s == "CLIENT" and service is not None and anc_name != service:
+                    out.append((anc_name, service, False))
+                if parent_name is None:
+                    parent_name = anc_name
+            if (
+                not is_err
+                and kind_s == "SERVER"
+                and kinds[a] == "CLIENT"
+                and (
+                    (shr[s] and sid == ids[a])
+                    or (par[s] is not None and par[s] == ids[a])
+                )
+            ):
+                is_err = err[a]
+        if parent_name is not None and child_name is not None:
+            out.append((parent_name, child_name, is_err))
+    return out
+
+
 class DependencyLinker:
     """Accumulates links across traces; mirrors the reference's usage pattern
     (one instance per task, ``putTrace`` per trace group, then ``link()``)."""
@@ -296,7 +464,11 @@ class DependencyLinker:
         self._error_counts: dict = {}
 
     def put_trace(self, spans: Iterable[Span]) -> "DependencyLinker":
-        for parent, child, is_error in link_trace(spans):
+        return self.put_links(link_trace(spans))
+
+    def put_links(self, triples: Iterable[tuple]) -> "DependencyLinker":
+        """Count one trace's ``(parent, child, is_error)`` triples."""
+        for parent, child, is_error in triples:
             key = (parent, child)
             self._call_counts[key] = self._call_counts.get(key, 0) + 1
             if is_error:
@@ -324,6 +496,19 @@ def trace_in_day_window(spans: Iterable[Span], start_ts: int, end_ts: int) -> bo
     for s in spans:
         if s.parent_id is None:
             ts = s.timestamp or 0
+            if ts == 0 or ts < start_ts or ts > end_ts:
+                return False
+    return True
+
+
+def roots_in_day_window(
+    parent_id: list, timestamp: list, start_ts: int, end_ts: int
+) -> bool:
+    """``trace_in_day_window`` on one trace's parent-id and timestamp
+    column lists."""
+    for p, ts in zip(parent_id, timestamp):
+        if p is None:
+            ts = ts or 0
             if ts == 0 or ts < start_ts or ts > end_ts:
                 return False
     return True

@@ -2,8 +2,9 @@
 
 Spark mapping: ``repartition(trace_key)`` + ``sortWithinPartitions`` + one
 ``mapInPandas`` pass over the Arrow channel. ``_sorted_groups`` cuts each
-task's sorted span stream into complete traces, and the pure-Python linker
-runs per trace — the reference's per-task linker over a trace-sorted row
+task's sorted span stream into complete traces as column lists, and
+``linker.link_columns`` links each one on integer slots (no ``Span``
+objects) — the reference's per-task linker over a trace-sorted row
 stream (mysql/.../DependencyLinkSpanIterator.java:25-56). The path walker
 (operators/paths.py) runs its per-trace chain walk on the same helper.
 Output is the per-partition link table, which the global A2 aggregation
@@ -15,7 +16,7 @@ Scale notes (100 TB):
   Bucketed span storage on trace_key removes it entirely (``clustered``,
   G1 parity — see plans/job.py notes).
 - per-trace skew ("Heavy" scenario): one giant trace lands on one task. The
-  kernel is O(n) in spans-per-trace with small constants (dict/deque), and
+  kernel is O(n) in spans-per-trace with small constants (dict/list), and
   holds only the open trace's narrow columns across batches — a 10⁷-span
   trace is ~1 GB of Python objects, survivable; ``isolate_heavy_over`` and
   ``links_from_spans_two_phase`` are the routes beyond that.
@@ -23,8 +24,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from itertools import repeat
-from typing import Iterable, Iterator, Sequence
+from itertools import chain
+from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..linker import DependencyLinker, Span, trace_in_day_window
+from ..linker import DependencyLinker, link_columns, roots_in_day_window
 from ..schemas import TRACE_LINKS_SCHEMA
 from .aggregate import aggregate_links
 
@@ -42,57 +43,54 @@ from .aggregate import aggregate_links
 #: ``_heavy_trace_keys``)
 HEAVY_SAMPLE_FRACTION = 0.05
 
-#: the LINK_INPUT_SCHEMA columns the linker reads, in ``spans_from_columns``
-#: argument order
+#: the LINK_INPUT_SCHEMA columns the linker reads: ``link_columns``'
+#: arguments, then the F2 window's timestamp
 _SPAN_COLS = (
     "parent_id", "id", "kind", "local_service", "remote_service",
     "shared", "is_error", "timestamp",
 )
 
 
-def spans_from_columns(
-    parent_id, id, kind, local_service, remote_service, shared, is_error,
-    timestamp,
-) -> list[Span]:
-    """Column-major span fields → one trace's ``Span`` list.
+def _strings(values: list) -> list:
+    return [v if isinstance(v, str) else None for v in values]
 
-    Accepts numpy arrays or lists. Arrow nulls may arrive as None or NaN:
-    a non-string id/service becomes None, a null flag False, a null
-    timestamp None. Pass ``timestamp=None`` when the caller keeps no
-    timestamps (streaming state)."""
-    if timestamp is None:
-        timestamp = repeat(None)
-    return [
-        Span(
-            parent_id=p if isinstance(p, str) else None,
-            id=i if isinstance(i, str) else None,
-            kind=k if isinstance(k, str) else None,
-            local_service=ls if isinstance(ls, str) else None,
-            remote_service=rs if isinstance(rs, str) else None,
-            shared=bool(sh) if sh is not None and sh == sh else False,
-            is_error=bool(er) if er is not None and er == er else False,
-            timestamp=int(ts) if ts is not None and ts == ts else None,
-        )
-        for p, i, k, ls, rs, sh, er, ts in zip(
-            parent_id, id, kind, local_service, remote_service, shared,
-            is_error, timestamp,
-        )
-    ]
+
+def _flags(values: list) -> list:
+    return [bool(v) if v is not None and v == v else False for v in values]
+
+
+def _longs(values: list) -> list:
+    return [int(v) if v is not None and v == v else None for v in values]
+
+
+#: the linker's null rules per ``_SPAN_COLS`` column. Arrow nulls may
+#: arrive as None or NaN: a non-string id/service becomes None, a null flag
+#: False, a null timestamp None
+_NULL_RULES = (*(_strings,) * 5, _flags, _flags, _longs)
+
+
+def span_lists(cols: Sequence[list]) -> list[list]:
+    """``_SPAN_COLS``-ordered column lists (a shorter prefix is fine) → the
+    same lists under the linker's null rules."""
+    return [rule(c) for rule, c in zip(_NULL_RULES, cols)]
 
 
 def _sorted_groups(
     batches: Iterable[pd.DataFrame],
     key_cols: Sequence[str],
     value_cols: Sequence[str],
+    to_lists: Callable[[list[list]], list[list]] | None = None,
 ) -> Iterator[tuple[tuple, list]]:
     """Cut a partition's key-sorted Arrow batch stream into complete groups.
 
     Yields ``(key, columns)`` once per group, in stream order: ``key`` is
-    the tuple of the group's ``key_cols`` values, ``columns`` one numpy
-    array per ``value_cols`` entry. A group is yielded when the next key
-    (or the end of the stream) closes it, so a group that straddles Arrow
-    batches arrives whole: its per-batch slices are kept and concatenated
-    once. Memory stays O(batch + open group), never O(partition)."""
+    the tuple of the group's ``key_cols`` values, ``columns`` one list per
+    ``value_cols`` entry. Each batch's value columns become Python lists
+    once, then pass through ``to_lists`` when given. A group is
+    yielded when the next key (or the end of the stream) closes it, so a
+    group that straddles Arrow batches arrives whole: its per-batch slices
+    are kept and concatenated once. Memory stays O(batch + open group),
+    never O(partition)."""
     open_key: tuple | None = None
     chunks: list[list] = []
     for pdf in batches:
@@ -100,7 +98,9 @@ def _sorted_groups(
         if n == 0:
             continue
         keys = [pdf[c].to_numpy() for c in key_cols]
-        cols = [pdf[c].to_numpy() for c in value_cols]
+        cols = [pdf[c].to_numpy().tolist() for c in value_cols]
+        if to_lists is not None:
+            cols = to_lists(cols)
         # boundary where ANY key column changes between adjacent rows
         changed = keys[0][1:] != keys[0][:-1]
         for k in keys[1:]:
@@ -120,7 +120,7 @@ def _sorted_groups(
 def _joined(chunks: list[list]) -> list:
     if len(chunks) == 1:
         return chunks[0]
-    return [np.concatenate(parts) for parts in zip(*chunks)]
+    return [list(chain.from_iterable(parts)) for parts in zip(*chunks)]
 
 
 def _heavy_trace_keys(df: DataFrame, group_cols: list[str], over: int) -> DataFrame:
@@ -242,12 +242,15 @@ def trace_links_partitioned(
         # one accumulator per (task, day) = the reference's per-task linker
         # (CassandraRowsToDependencyLinks) doubling as the map-side combiner
         linkers: dict = {}
-        for key, cols in _sorted_groups(batches, group_cols, _SPAN_COLS):
-            spans = spans_from_columns(*cols)
-            if window is not None and not trace_in_day_window(spans, *window):
+        for key, cols in _sorted_groups(batches, group_cols, _SPAN_COLS, span_lists):
+            if window is not None and not roots_in_day_window(
+                cols[0], cols[7], *window
+            ):
                 continue
             day = key[0] if day_col else None
-            linkers.setdefault(day, DependencyLinker()).put_trace(spans)
+            linkers.setdefault(day, DependencyLinker()).put_links(
+                link_columns(*cols[:7])
+            )
         rows = [
             (
                 (day, link["parent"], link["child"], link["call_count"], link["error_count"])

@@ -2,7 +2,7 @@
 
 Local mode for tests/bench; on a real cluster the same conf block applies —
 AQE owns runtime re-planning (partition coalescing, skew splitting), Arrow
-feeds the one grouped-map kernel, UTC everywhere (the reference's day math is
+feeds the sorted-stream ``mapInPandas`` kernels, UTC everywhere (the reference's day math is
 UTC-midnight based, [EXT] DateUtil.midnightUTC).
 """
 
@@ -61,8 +61,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for the grouped-map linker kernel and pandas interchange
+        # Arrow for the mapInPandas linker and path kernels and pandas
+        # interchange
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark's daemon, minus the zip-archive re-read PySpark triggers
+        # before every Python task (worker_daemon.py). Workers must import
+        # this package at daemon start, as the kernels need it anyway;
+        # SPARK_CONF=spark.python.daemon.module=pyspark.daemon restores the
+        # stock daemon
+        .config("spark.python.daemon.module", "zipkin_dependencies_spark.worker_daemon")
         # idempotent day re-runs: overwrite only the partitions being written
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # the pre-coalesce width of every shuffle: AQE merges its hash

@@ -38,14 +38,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..linker import DependencyLinker
-from ..operators.link import spans_from_columns
+from ..linker import DependencyLinker, link_columns
+from ..operators.link import span_lists
 from ..schemas import TRACE_LINKS_SCHEMA
 
 #: state kept per in-flight trace: the narrow span columns, column-major
-#: (arrays compress well in the state store and rebuild Spans cheaply), in
-#: ``spans_from_columns`` argument order; no timestamp (the stream links
-#: without the F2 window).
+#: (arrays compress well in the state store and are the column linker's
+#: input), in ``link_columns`` argument order; no timestamp (the stream
+#: links without the F2 window).
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("parent_id", T.ArrayType(T.StringType())),
@@ -65,8 +65,8 @@ _EMPTY_LINKS = pd.DataFrame(columns=["parent", "child", "call_count", "error_cou
 
 def _link_columns(cols: dict[str, list]) -> pd.DataFrame:
     """Column-major state → linked per-trace links table."""
-    spans = spans_from_columns(*(cols[c] for c in _STATE_COLS), timestamp=None)
-    links = DependencyLinker().put_trace(spans).link()
+    lists = span_lists([cols[c] for c in _STATE_COLS])
+    links = DependencyLinker().put_links(link_columns(*lists)).link()
     if not links:
         return _EMPTY_LINKS
     return pd.DataFrame(links)[["parent", "child", "call_count", "error_count"]]

@@ -254,19 +254,17 @@ def q_links_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_links_heavy_isolated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-isolation path oracle check: routing heavy traces to dedicated
-    partitions changes task placement, never results — so the plain links
-    oracle IS the assertion (SURVEY §4 skew handling; Heavy IT analog)."""
+    """The default linker on the heavy-trace slot: the kernel path
+    (``links_from_spans``) with no skew routing. A hash exchange cannot give
+    a giant trace a task of its own, so the default path is the one
+    single-task route; ``links_two_phase`` is the route that splits a giant
+    across tasks. The plain links oracle asserts the result (SURVEY §4
+    skew handling; Heavy IT analog)."""
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.link import links_from_spans
     from zipkin_dependencies_spark.testdata import derived_spans
 
-    spans = derived_spans(spark, sf_dir)
-    # threshold chosen so only the tail of the trace-size distribution
-    # routes specially (fixture traces have 2-8 spans): the broadcast set
-    # stays small — the shape the isolation is FOR. A threshold below the
-    # median would broadcast half the key space and only add overhead.
-    return links_from_spans(normalize_spans(spans), isolate_heavy_over=6)
+    return links_from_spans(normalize_spans(derived_spans(spark, sf_dir)))
 
 
 def q_links_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6058,8 +6056,9 @@ spans_day AS (
         # links exactly — the plain links oracle IS the assertion
         "links_strict128": links_oracle,
         "dedupe_replayed_links": links_oracle,
-        # heavy isolation / bucketed storage change placement & shuffle
-        # topology, never results
+        # the two-phase giant split and bucketed storage change placement &
+        # shuffle topology, never results; links_heavy_isolated runs the
+        # default path
         "links_heavy_isolated": links_oracle,
         "links_two_phase": links_oracle,
         "links_relational": links_oracle,

@@ -192,8 +192,8 @@ def test_partitioned_links_match_python_linker(spark):
     """The sorted-stream path on the full sf0.001 forest must equal the
     pure-Python DependencyLinker run trace by trace over the collected
     spans, with the F2 root window off and on. The oracle feeds each trace
-    in the kernel's (id, shared) order, nulls first, so multi-root traces
-    elect the same root."""
+    in the kernel's identity-tuple order, nulls first, so multi-root traces
+    elect the same root and duplicate reports merge the same way."""
     from collections import defaultdict
 
     from __spark_entry__ import WINDOW_1996_US
@@ -204,9 +204,15 @@ def test_partitioned_links_match_python_linker(spark):
     )
     from zipkin_dependencies_spark.operators.link import links_from_spans
 
+    def nulls_first(v):
+        return (v is not None, "" if v is None else v)
+
     norm = _sf_forest(spark)
+    cols = ("id", "shared", "parent_id", "kind", "local_service",
+            "remote_service", "is_error", "timestamp")
+    rows = sorted(norm.collect(), key=lambda r: [nulls_first(r[c]) for c in cols])
     traces = defaultdict(list)
-    for r in norm.collect():
+    for r in rows:
         traces[r.trace_key].append(
             Span(
                 parent_id=r.parent_id, id=r.id, kind=r.kind,
@@ -219,7 +225,6 @@ def test_partitioned_links_match_python_linker(spark):
         linker = DependencyLinker()
         kept = 0
         for spans in traces.values():
-            spans.sort(key=lambda s: (s.id is not None, s.id or "", s.shared))
             if window is None or trace_in_day_window(spans, *window):
                 linker.put_trace(spans)
                 kept += 1
@@ -254,3 +259,27 @@ def test_kernels_agree_when_traces_straddle_arrow_batches(spark):
         small = run()
     assert small == default
     assert len(default[0]) > 0 and len(default[1]) > 0
+
+
+def test_conflicting_reports_link_the_same_in_any_row_order(spark, spans_df_factory):
+    """Two reports of one client span disagree on its callee (``back`` in
+    one, ``db`` in the other). The kernel merges them first-non-null-wins,
+    so its in-trace sort, not shuffle arrival order, must decide which
+    report comes first: both row orders, each read as one input partition,
+    give the same links."""
+    from zipkin_dependencies_spark.functions import normalize_spans
+    from zipkin_dependencies_spark.operators.link import links_from_spans
+
+    root = make_span(id="a", kind="SERVER", local="front")
+    to_back = make_span(id="c", parent_id="a", kind="CLIENT", local="front",
+                        remote="back")
+    to_db = make_span(id="c", parent_id="a", kind="CLIENT", local="front",
+                      remote="db")
+
+    def links(rows):
+        spans = normalize_spans(spans_df_factory(rows).coalesce(1))
+        return {tuple(r) for r in links_from_spans(spans).collect()}
+
+    # the sort puts the lower remote_service first, so "back" wins
+    assert links([root, to_back, to_db]) == {("front", "back", 1, 0)}
+    assert links([root, to_db, to_back]) == {("front", "back", 1, 0)}

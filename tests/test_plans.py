@@ -130,21 +130,6 @@ def test_kernel_exchanges_start_per_core_and_aqe_coalesces_them(spark):
             spark.conf.unset(initial)
 
 
-def test_heavy_isolation_broadcasts_the_heavy_key_set(spark):
-    from zipkin_dependencies_spark.functions import normalize_spans
-    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
-    from zipkin_dependencies_spark.testdata import derived_spans
-
-    df = trace_links_partitioned(
-        normalize_spans(derived_spans(spark, SF)), isolate_heavy_over=100
-    )
-    plan = formatted(df)
-    # the heavy-key set joins in via broadcast — the span table is never
-    # shuffled to find its skewed keys
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastExchange" in plan
-
-
 def test_sessionize_reuses_one_user_exchange(spark):
     import __spark_entry__ as e
 
@@ -211,19 +196,17 @@ def test_near_dup_clusters_lsh_has_no_fullcorpus_shingle_selfjoin(spark):
 
 def test_heavy_discovery_samples_not_full_scan(spark):
     """The heavy-key pre-pass aggregates a SAMPLE, not the full span table:
-    the plan's discovery subtree (below the broadcast) contains a Sample node
-    feeding its aggregate — at 100 TB a second full span-scale aggregation
-    just to find a handful of skewed keys is the bug, not the feature."""
+    the discovery plan has a Sample node under its aggregate — at 100 TB a
+    second full span-scale aggregation just to find a handful of skewed
+    keys is the bug, not the feature."""
     from zipkin_dependencies_spark.functions import normalize_spans
-    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
+    from zipkin_dependencies_spark.operators.link import _heavy_trace_keys
     from zipkin_dependencies_spark.testdata import derived_spans
 
-    df = trace_links_partitioned(
-        normalize_spans(derived_spans(spark, SF)), isolate_heavy_over=100
-    )
+    df = _heavy_trace_keys(normalize_spans(derived_spans(spark, SF)), 100)
     plan = formatted(df)
     assert "Sample" in plan
-    assert "BroadcastHashJoin" in plan
+    assert plan.index("HashAggregate") < plan.index("Sample")
 
 def test_decontaminate_broadcasts_benchmark_no_corpus_shuffle(spark):
     """The 100 TB contract of decontamination: the benchmark digest set is

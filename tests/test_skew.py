@@ -1,7 +1,7 @@
 """Heavy-trace skew stress (the reference's ITDependenciesHeavy analog,
 cassandra3/.../ITCassandraDependenciesHeavy.java:17-31): one trace holding the
-majority of all spans must link correctly, with and without heavy isolation
-routing, and both strategies must agree."""
+majority of all spans must link correctly on the kernel path and on the
+two-phase route, and both must agree."""
 
 from __future__ import annotations
 
@@ -67,19 +67,6 @@ def test_heavy_trace_links_correctly(spark, skewed_spans):
     assert sum(n for _, _, n, _ in gw) == LIGHT_TRACES
 
 
-def test_heavy_isolation_matches_default(spark, skewed_spans):
-    from zipkin_dependencies_spark.operators.aggregate import aggregate_links
-    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
-
-    base = _links(aggregate_links(trace_links_partitioned(skewed_spans)))
-    isolated = _links(
-        aggregate_links(
-            trace_links_partitioned(skewed_spans, isolate_heavy_over=1_000)
-        )
-    )
-    assert base == isolated
-
-
 def test_heavy_trace_at_bench_scale_completes(spark):
     """BASELINE.md skew gate: a single trace holding sf0.1-scale span volume
     (300k spans, >50% of a day) links correctly in one task without OOM —
@@ -101,33 +88,18 @@ def test_heavy_trace_at_bench_scale_completes(spark):
         (F.col("id") % 100 == 1).alias("is_error"),
         F.lit(1_000_000).alias("timestamp"),
     )
-    got = {
-        tuple(r)
-        for r in links_from_spans(heavy, isolate_heavy_over=10_000).collect()
-    }
+    got = {tuple(r) for r in links_from_spans(heavy).collect()}
     assert got == {
         ("gw", "svc-a", 1, 0),                       # the root's inbound call
         ("svc-a", "svc-b", n - 1, (n - 2) // 100 + 1),  # children; errors at ids 1,101,…
     }
-
-def test_clustered_with_heavy_isolation_raises(spark, skewed_spans):
-    """clustered=True promises a shuffle-free plan; isolate_heavy_over needs
-    a repartition. The combination must refuse loudly instead of silently
-    reintroducing the span-scale shuffle the caller opted out of."""
-    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
-
-    with pytest.raises(ValueError, match="clustered"):
-        trace_links_partitioned(
-            skewed_spans, clustered=True, isolate_heavy_over=1_000
-        )
-
 
 def test_heavy_trace_keys_finds_exactly_the_giant(spark, skewed_spans):
     """The sampled heavy-key pre-pass returns the fixture's one giant trace
     and none of its light traces."""
     from zipkin_dependencies_spark.operators.link import _heavy_trace_keys
 
-    keys = _heavy_trace_keys(skewed_spans, ["trace_key"], 1_000).collect()
+    keys = _heavy_trace_keys(skewed_spans, 1_000).collect()
     assert [tuple(r) for r in keys] == [("t-heavy",)]
 
 def test_two_phase_giant_trace_matches_kernel_and_splits(spark, skewed_spans):
@@ -135,7 +107,7 @@ def test_two_phase_giant_trace_matches_kernel_and_splits(spark, skewed_spans):
     links through the two-phase route (relational subtree phase + global
     merge) with the SAME links the kernel path emits, and the giant trace's
     per-span work is genuinely spread across ≥2 tasks (the whole point —
-    isolation alone leaves a 10^8-span trace on one core)."""
+    the kernel path leaves a 10^8-span trace on one core)."""
     from zipkin_dependencies_spark.operators.link import (
         links_from_spans,
         links_from_spans_two_phase,

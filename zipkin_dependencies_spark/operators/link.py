@@ -15,11 +15,12 @@ Scale notes (100 TB):
 - the repartition(trace_key) shuffle is THE big shuffle of the pipeline.
   Bucketed span storage on trace_key removes it entirely (``clustered``,
   G1 parity — see plans/job.py notes).
-- per-trace skew ("Heavy" scenario): one giant trace lands on one task. The
-  kernel is O(n) in spans-per-trace with small constants (dict/list), and
-  holds only the open trace's narrow columns across batches — a 10⁷-span
-  trace is ~1 GB of Python objects, survivable; ``isolate_heavy_over`` and
-  ``links_from_spans_two_phase`` are the routes beyond that.
+- per-trace skew ("Heavy" scenario): one giant trace lands on one task,
+  together with whatever light traces hash beside it. The kernel is O(n) in
+  spans-per-trace with small constants (dict/list), and holds only the open
+  trace's narrow columns across batches — a 10⁷-span trace is ~1 GB of
+  Python objects, survivable; ``links_from_spans_two_phase`` is the route
+  beyond that, the one that splits a giant across tasks.
 """
 
 from __future__ import annotations
@@ -123,8 +124,8 @@ def _joined(chunks: list[list]) -> list:
     return [list(chain.from_iterable(parts)) for parts in zip(*chunks)]
 
 
-def _heavy_trace_keys(df: DataFrame, group_cols: list[str], over: int) -> DataFrame:
-    """→ the ``group_cols`` of every group with more than ``over`` rows.
+def _heavy_trace_keys(df: DataFrame, over: int) -> DataFrame:
+    """→ the ``trace_key`` of every trace with more than ``over`` spans.
 
     Discovery is SAMPLED (``HEAVY_SAMPLE_FRACTION``, seeded): a group with
     n rows surfaces ~n·f sampled rows, so thresholding sampled counts at
@@ -132,15 +133,16 @@ def _heavy_trace_keys(df: DataFrame, group_cols: list[str], over: int) -> DataFr
     while scanning only f of the table — at 100 TB an exact
     ``groupBy().count()`` pre-pass would itself be a span-scale
     aggregation. Mis-detection only moves work: a missed heavy trace still
-    links correctly (co-hashed, slower), a false positive routes a light
-    trace alone. The result is tiny (skew means FEW keys)."""
+    links correctly through the kernel (one task, slower), a false positive
+    links a light trace relationally. The result is tiny (skew means FEW
+    keys)."""
     cutoff = max(1.0, over * HEAVY_SAMPLE_FRACTION / 2.0)
     return (
         df.sample(fraction=HEAVY_SAMPLE_FRACTION, seed=11)
-        .groupBy(*group_cols)
+        .groupBy("trace_key")
         .count()
         .filter(F.col("count") > cutoff)
-        .select(*group_cols)
+        .select("trace_key")
     )
 
 
@@ -148,7 +150,6 @@ def trace_links_partitioned(
     normalized_spans: DataFrame,
     window: tuple[int, int] | None = None,
     day_col: str | None = None,
-    isolate_heavy_over: int | None = None,
     clustered: bool = False,
 ) -> DataFrame:
     """LINK_INPUT_SCHEMA rows → per-partition links (pre-aggregation).
@@ -168,7 +169,9 @@ def trace_links_partitioned(
       distinct (parent, child) per partition — the reference's reduceByKey
       combiner, done one stage earlier than Catalyst's partial aggregate.
     - skew: a giant trace still lands on one task, but costs only its own
-      O(n) linking, with no per-trace setup tax.
+      O(n) linking, with no per-trace setup tax. A hash exchange cannot
+      give it a task of its own (any routing key is hashed like the rest),
+      so the route that spreads a giant is ``links_from_spans_two_phase``.
 
     Width: the exchange is a column-only ``repartition``, so AQE sizes it.
     It starts at ``spark.sql.shuffle.partitions`` hash partitions
@@ -193,36 +196,18 @@ def trace_links_partitioned(
     is skipped and the pipeline's one span-scale shuffle disappears — the
     G1 ``spanBy`` parity path. The caller owns the guarantee; a mis-declared
     input would split traces across tasks and under-link them.
-
-    ``isolate_heavy_over=N`` adds skew routing (the reference's Heavy IT
-    hazard, SURVEY §4: AQE skew splitting can't apply to stateful Python
-    stages because one trace MUST stay whole): the sampled pre-pass
-    ``_heavy_trace_keys`` finds traces above N spans, and each gets a
-    dedicated routing key so the hash exchange places each giant trace alone
-    instead of stacking it on top of a normal partition's worth of other
-    traces. Linking a giant trace is still one task, but it no longer makes
-    stragglers of everyone hashed alongside it. The RESULT is
-    placement-independent.
-
-    ``isolate_heavy_over`` is incompatible with ``clustered=True``: routing
-    requires a repartition, which would silently reintroduce the span-scale
-    shuffle the clustered caller explicitly opted out of — that combination
-    raises. Heavy traces in bucketed layouts are isolated at write time
-    (bucket count / bucketing key choice), not per-job.
     """
-    if clustered and isolate_heavy_over:
-        raise ValueError(
-            "isolate_heavy_over requires a repartition, but clustered=True "
-            "declares a shuffle-free pre-bucketed input; re-bucket heavy "
-            "traces at write time or drop one of the two options"
-        )
     group_cols = ([day_col] if day_col else []) + ["trace_key"]
     # Secondary sort keys make the per-trace span ORDER deterministic. The
     # kernel's root election ("first parentless span", linker.py build_tree)
-    # depends on arrival order; without these a multi-root trace could elect
-    # a different root per run. Sorting by (id, shared) pins it to the
-    # lowest span id — zero extra shuffle, the sort already exists.
-    order_cols = [*group_cols, "id", "shared"]
+    # and its merge of reports that share (id, shared) (first non-null field
+    # wins) both depend on arrival order. Sorting on the full identity tuple
+    # pins both, so shuffle arrival order never decides a link — zero extra
+    # shuffle, the sort already exists.
+    order_cols = [
+        *group_cols, "id", "shared", "parent_id", "kind",
+        "local_service", "remote_service", "is_error", "timestamp",
+    ]
     out_cols = ([day_col] if day_col else []) + [
         "parent", "child", "call_count", "error_count",
     ]
@@ -262,41 +247,14 @@ def trace_links_partitioned(
         ]
         yield pd.DataFrame(rows, columns=out_cols)
 
-    df = normalized_spans
-    if isolate_heavy_over:
-        # broadcast the heavy-key set into a routing column. Light traces
-        # route by their group key, each heavy trace by its own "H:" key;
-        # AQE leaves a giant's partition unmerged while light ones coalesce
-        gk = F.concat_ws("|", *group_cols)
-        heavy = _heavy_trace_keys(df, group_cols, isolate_heavy_over).select(
-            gk.alias("__gk")
-        )
-        df = (
-            df.join(
-                F.broadcast(heavy.withColumn("__heavy", F.lit(True))),
-                gk == F.col("__gk"),
-                "left_outer",
-            )
-            .withColumn(
-                "__route",
-                F.when(F.col("__heavy"), F.concat(F.lit("H:"), gk)).otherwise(gk),
-            )
-            .drop("__gk", "__heavy")
-        )
-        return (
-            df.repartition("__route")
-            .sortWithinPartitions(*order_cols)
-            .drop("__route")
-            .mapInPandas(link_partition, schema=schema)
-        )
     if clustered:
         # bucketed input: complete traces per partition by construction;
         # only the in-partition sort (no exchange) remains
-        return df.sortWithinPartitions(*order_cols).mapInPandas(
+        return normalized_spans.sortWithinPartitions(*order_cols).mapInPandas(
             link_partition, schema=schema
         )
     return (
-        df.repartition(*group_cols)
+        normalized_spans.repartition(*group_cols)
         .sortWithinPartitions(*order_cols)
         .mapInPandas(link_partition, schema=schema)
     )
@@ -306,20 +264,12 @@ def links_from_spans(
     normalized_spans: DataFrame,
     window: tuple[int, int] | None = None,
     clustered: bool = False,
-    isolate_heavy_over: int | None = None,
 ) -> DataFrame:
     """Full core: per-trace linking (``trace_links_partitioned``) + global
     A2 reduction. clustered=True: input is a bucketed span table; skip the
-    grouping shuffle (G1 parity). isolate_heavy_over=N: route giant traces
-    to dedicated partitions (skew isolation — must never change the result,
-    only the placement)."""
+    grouping shuffle (G1 parity)."""
     return aggregate_links(
-        trace_links_partitioned(
-            normalized_spans,
-            window,
-            clustered=clustered,
-            isolate_heavy_over=isolate_heavy_over,
-        )
+        trace_links_partitioned(normalized_spans, window, clustered=clustered)
     )
 
 
@@ -328,12 +278,12 @@ def links_from_spans_two_phase(
     giant_over: int = 100_000,
 ) -> DataFrame:
     """Two-phase linking for GIANT traces (SURVEY §4's one custom scale
-    piece; the reference's Heavy IT hazard taken past what isolation fixes,
-    ITCassandraDependenciesHeavy.java:17-31).
+    piece; the reference's Heavy IT hazard,
+    ITCassandraDependenciesHeavy.java:17-31) — the linker's one giant-trace
+    route.
 
-    ``isolate_heavy_over`` keeps a giant trace from straggling its
-    neighbors, but the trace itself is still ONE task — a 10⁸-span trace is
-    hours on one core. This operator splits the giant trace ACROSS tasks:
+    The kernel path links a trace in ONE task — a 10⁸-span trace is hours
+    on one core. This operator splits the giant trace ACROSS tasks:
 
     - phase 1 (subtree phase): giant traces route to the pure-Catalyst
       relational linker (operators/link_relational.py) whose operations key
@@ -343,7 +293,7 @@ def links_from_spans_two_phase(
       subtree, and AQE's skew-join splitting absorbs hot parent keys
       (it applies here precisely because nothing is a stateful Python
       group). Giants the relational path can't own (dup span keys, deep or
-      cyclic chains — eligibility E1-E4) fall back to the kernel, isolated.
+      cyclic chains — eligibility E1-E4) fall back to the kernel.
     - phase 2 (merge phase): the per-span link emissions from both routes
       merge in the global (parent, child) aggregate — boundary spans need
       no special casing because every span's emission depends only on its
@@ -358,7 +308,7 @@ def links_from_spans_two_phase(
     from .link_relational import links_from_spans_hybrid
 
     df = normalized_spans
-    giants = _heavy_trace_keys(df, ["trace_key"], giant_over)
+    giants = _heavy_trace_keys(df, giant_over)
 
     # key-cardinality driver check (like the reference's isEmpty() actions,
     # F5): on the overwhelmingly common day with NO giant trace, skip the

@@ -4,7 +4,8 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS].
 
 Output contract (driver-proof): the LAST stdout line is ONE compact JSON
-headline — total seconds, query count, sf, calibration — guaranteed to fit
+headline — total seconds, query count, sf, the task slots it ran on
+(`cpus_effective`), calibration — guaranteed to fit
 the driver's 2 KB stdout-tail capture (round 3's per-query map pushed the
 headline past the tail and the driver recorded "parsed": null). Per-query
 times and GC detail go to a sidecar file ($SPARK_GRAFT_BENCH_DETAIL,
@@ -245,6 +246,9 @@ def main() -> None:
             run_once(f"retry{retry_i}", name)
 
     still_degraded = [n for n in headline if not has_clean.get(n, False)]
+    # the task slots the queries actually ran on (local[N] gives N whatever
+    # the host's core count), so a reader need not infer it from the master
+    cpus_effective = spark.sparkContext.defaultParallelism
     calibration["steal_s"] = round((steal_ticks() - steal0) / 100.0, 1)
     total = round(sum(timings.values()), 3)
 
@@ -312,6 +316,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus_effective": cpus_effective,
         "calibration": calibration,
         "gc_ms": gc_per_query,
         # per-query stolen core-seconds during the KEPT run's window, the
@@ -347,6 +352,7 @@ def main() -> None:
                 "n_queries": len(timings),
                 "queries": slowest,
                 "sf": sf,
+                "cpus_effective": cpus_effective,
                 "calibration": calibration,
                 "n_retried": len(retried),
                 "n_still_degraded": len(still_degraded),

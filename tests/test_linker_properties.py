@@ -10,11 +10,12 @@ operator runs (operators/link.py) to the ``Span`` oracle.
 from __future__ import annotations
 
 from collections import Counter
+from itertools import groupby
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tests.test_linker import columns_of
+from tests.test_linker import LINK_FIELDS, columns_of
 from zipkin_dependencies_spark.linker import (
     DependencyLinker,
     Span,
@@ -104,6 +105,47 @@ def test_exact_replay_is_idempotent(spans):
     # storage replay: duplicated identical spans merge by (id, shared) —
     # the D1 dedupe semantics must already hold inside the kernel
     assert sorted(link_trace(spans + spans)) == sorted(link_trace(spans))
+
+
+#: a span report as the linker task sees it, in the order the kernel's
+#: in-trace sort uses (operators/link.py::trace_links_partitioned)
+SORT_FIELDS = (
+    "id", "shared", "parent_id", "kind", "local_service", "remote_service",
+    "is_error", "timestamp",
+)
+
+
+def _kernel_output(rows: list[tuple], lo: int, hi: int) -> tuple:
+    """``link_columns`` and ``roots_in_day_window`` on SORT_FIELDS rows."""
+    cols = dict(zip(SORT_FIELDS, map(list, zip(*rows))))
+    links = Counter(link_columns(*(cols[f] for f in LINK_FIELDS)))
+    return links, roots_in_day_window(cols["parent_id"], cols["timestamp"], lo, hi)
+
+
+@given(traces(), st.data(), st.integers(0, 2**40), st.integers(0, 2**40))
+@settings(max_examples=500, deadline=None)
+def test_duplicate_reports_never_change_the_column_kernel(spans, data, a, b):
+    # a trace stream sorted only on (id, shared), its reports in any order
+    # within a span; copies of any reports, each placed anywhere after its
+    # original inside that span's run, change neither the links nor the F2
+    # window. The kernel's full identity sort is one such order (each copy
+    # lands beside its original), so the dedupe never changes the links
+    lo, hi = min(a, b), max(a, b)
+    distinct = dict.fromkeys(tuple(getattr(s, f) for f in SORT_FIELDS) for s in spans)
+    # Spark's ascending sort: nulls first
+    reports = sorted(
+        data.draw(st.permutations(list(distinct))),
+        key=lambda r: [(v is not None, v) for v in r[:2]],
+    )
+    replayed: list[tuple] = []
+    for _, run in groupby(reports, key=lambda r: r[:2]):
+        run = list(run)
+        for report in list(run):
+            for _ in range(data.draw(st.integers(0, 2))):
+                after = run.index(report) + 1
+                run.insert(data.draw(st.integers(after, len(run))), report)
+        replayed += run
+    assert _kernel_output(replayed, lo, hi) == _kernel_output(reports, lo, hi)
 
 
 @given(traces(), st.integers(0, 2**40), st.integers(0, 2**40))

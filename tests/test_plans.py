@@ -72,6 +72,41 @@ def test_linker_pipeline_has_single_span_exchange(spark):
     assert len(above) == 1  # exactly the A2 aggregate's link-sized exchange
 
 
+def _exchanges_below_kernel(df) -> list[str]:
+    """→ the ``Arguments`` line of each Exchange below the plan's one
+    MapInPandas (formatted-plan node ids are assigned bottom-up)."""
+    import re
+
+    plan = formatted(df)
+    [kernel] = _node_ids(plan, "MapInPandas")
+    args = re.findall(r"^\((\d+)\) Exchange\n(?:.*\n)*?Arguments: (.*)$", plan, re.M)
+    return [a for i, a in args if int(i) < kernel]
+
+
+def test_daily_job_shuffles_spans_once(spark):
+    """The job the CLI runs (D1 dedupe on) moves its spans through ONE
+    exchange: ``dedupe_spans`` partitions on trace_key, one of its identity
+    columns, so its dropDuplicates plans no exchange of its own and the
+    linker's ``repartition(trace_key)`` is removed as redundant. The
+    registered replay query chains the same two operators."""
+    import __spark_entry__ as e
+    from zipkin_dependencies_spark.plans.job import DependencyLinksJob, JobConfig
+    from zipkin_dependencies_spark.testdata import derived_spans
+
+    # checkpointed, so the fixture's own derivation adds no exchange
+    spans = derived_spans(spark, SF).localCheckpoint(eager=True)
+    job = DependencyLinksJob(spark, JobConfig(day="1996-03-15", spans_path="unused"))
+    [span_exchange] = _exchanges_below_kernel(job.links(spans))
+    assert span_exchange.startswith("hashpartitioning(trace_key#")
+    assert "REPARTITION_BY_COL" in span_exchange
+
+    # the replay query derives its spans with a window over l_orderkey
+    replayed = e.q_dedupe_replayed_links(spark, SF)
+    [span_exchange] = [a for a in _exchanges_below_kernel(replayed) if "trace_key#" in a]
+    assert span_exchange.startswith("hashpartitioning(trace_key#")
+    assert "REPARTITION_BY_COL" in span_exchange
+
+
 def _plan_nodes(plan):
     """Pre-order walk of a physical plan, stepping into query stages."""
     yield plan
@@ -97,10 +132,13 @@ def test_kernel_exchanges_start_per_core_and_aqe_coalesces_them(spark):
     """Both Python kernels' span exchanges (the flagship linker's and
     trace_paths') are column-only repartitions: they start at one
     partition per core or more even when spark.sql.shuffle.partitions is
-    narrower (session.get_spark's floor), and AQE coalesces them."""
+    narrower (session.get_spark's floor), and AQE coalesces them. In the
+    daily job, the dedupe's and the linker's trace_key repartitions get
+    the same raised width, so they still collapse into one."""
     import __spark_entry__ as e
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.paths import trace_paths
+    from zipkin_dependencies_spark.plans.job import DependencyLinksJob, JobConfig
     from zipkin_dependencies_spark.session import get_spark, scoped_conf
     from zipkin_dependencies_spark.testdata import derived_spans
 
@@ -111,9 +149,11 @@ def test_kernel_exchanges_start_per_core_and_aqe_coalesces_them(spark):
         try:
             # re-applies the factory's settings to the running session
             assert get_spark(shuffle_partitions=narrow) is spark
+            job = DependencyLinksJob(spark, JobConfig(day="1996-03-15", spans_path="unused"))
             for df in (
                 e.q_dependency_links(spark, SF),
                 trace_paths(normalize_spans(derived_spans(spark, SF))),
+                job.links(derived_spans(spark, SF)),
             ):
                 [(origin, width)] = _repartition_exchanges(df)
                 assert origin == "REPARTITION_BY_COL"

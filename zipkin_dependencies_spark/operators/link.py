@@ -12,9 +12,10 @@ then sums. Map-side cost is bounded: the kernel's output cardinality is
 O(|services|²) per partition, orders of magnitude smaller than its input.
 
 Scale notes (100 TB):
-- the repartition(trace_key) shuffle is THE big shuffle of the pipeline.
-  Bucketed span storage on trace_key removes it entirely (``clustered``,
-  G1 parity — see plans/job.py notes).
+- the repartition(trace_key) shuffle is THE big shuffle of the pipeline;
+  the D1 dedupe shares it (operators/dedup.py). Bucketed span storage on
+  trace_key removes it entirely (``clustered``, G1 parity — see
+  plans/job.py notes).
 - per-trace skew ("Heavy" scenario): one giant trace lands on one task,
   together with whatever light traces hash beside it. The kernel is O(n) in
   spans-per-trace with small constants (dict/list), and holds only the open
@@ -163,7 +164,10 @@ def trace_links_partitioned(
     Why this shape:
     - ONE shuffle, and the Python boundary is crossed once per *partition*,
       not once per *trace*: Arrow batches stream through, and only the
-      trace open at a batch boundary is carried over.
+      trace open at a batch boundary is carried over. Input that
+      ``dedupe_spans`` already hash-partitioned on trace_key at the same
+      width (the daily job's) keeps that exchange: Spark drops this
+      repartition as redundant, so the job still shuffles its spans once.
     - links are partially aggregated map-side into one ``DependencyLinker``
       per task before emission, so the final A2 exchange moves one row per
       distinct (parent, child) per partition — the reference's reduceByKey

@@ -25,7 +25,9 @@ twin by definition):
   pins one behavior on both engines);
 - callers must provide unique (trace_key, id) rows — run D1
   ``dedupe_spans`` first (a duplicate id keeps only one of its rows in
-  the walk).
+  the walk). That costs no extra shuffle: the dedupe's trace_key
+  partitioning survives the 4-column projection, so the walker's
+  repartition(trace_key) plans no exchange of its own.
 
 Scale: the final count is |distinct paths| cardinality with a
 TakeOrdered top-k — no global sort, no driver collect.

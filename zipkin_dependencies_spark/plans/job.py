@@ -1,13 +1,16 @@
 """The engine's single query lifecycle (SURVEY §3, "our engine's lifecycle"):
 
 config → SparkSession → source adapter → normalize to the v2 span frame →
-day-filter variant (F1/F2/F3, default F2 parity) → dedupe →
-repartition(trace_key) + sortWithinPartitions → mapInPandas(linker per trace,
-via operators/link.py::_sorted_groups) → groupBy(parent, child).agg(sum, sum)
+day-filter variant (F1/F2/F3, default F2 parity) → repartition(trace_key) →
+dedupe → sortWithinPartitions → mapInPandas(linker per trace, via
+operators/link.py::_sorted_groups) → groupBy(parent, child).agg(sum, sum)
 → day-partition overwrite write.
 
-One Catalyst plan end to end; the only Python hop is the Arrow-vectorized
-linker kernel; control crosses driver→executor at the write action only.
+One Catalyst plan end to end, with one span-scale shuffle: the dedupe
+hash-partitions on trace_key, so the linker's own repartition(trace_key)
+plans no second exchange (operators/dedup.py). The only Python hop is the
+Arrow-vectorized linker kernel; control crosses driver→executor at the
+write action only.
 
 Replaces all three reference entry points
 (cassandra3|mysql|elasticsearch/.../\\*DependenciesJob.run()); the reference's
@@ -67,10 +70,11 @@ class DependencyLinksJob:
 
         normalized = normalize_spans(spans, strict_trace_id=cfg.strict_trace_id)
         if not cfg.clustered:
-            # D1 is a shuffle-shrinking optimization whose dropDuplicates
-            # exchange would destroy the declared co-location; the linker
-            # kernel's tree merge makes exact duplicates harmless (see
-            # operators/dedup.py), so clustered scans skip it
+            # D1 brings its own repartition(trace_key): on clustered input
+            # that is the span-scale exchange the declared co-location
+            # exists to skip. The linker kernel's tree merge makes exact
+            # duplicates harmless (see operators/dedup.py), so clustered
+            # scans skip the dedupe
             normalized = dedupe_spans(normalized)
 
         window = (start_us, end_us) if cfg.day_filter is DayFilter.TRACE_ROOT else None

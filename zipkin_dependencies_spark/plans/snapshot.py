@@ -20,6 +20,9 @@ from __future__ import annotations
 #: analytics, path analytics, quality gates, TPC-H-analog joins, rollups)
 SNAPSHOT_QUERIES: tuple[str, ...] = (
     "dependency_links",
+    # the D1 dedupe chained to the linker, as the daily job runs it: the
+    # dedupe's trace_key exchange is the only span-scale one
+    "dedupe_replayed_links",
     "links_relational",
     "v1_links",
     "minhash_lsh",

@@ -541,7 +541,7 @@ def q_json_spans_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(doc)
         .alias("json")
     )
-    spans = spans_from_json_strings(docs)
+    spans, _ = spans_from_json_strings(docs)
     return spans.select(
         "trace_id",
         "id",
@@ -638,13 +638,9 @@ def q_json_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced as a gated 4-row DataFrame — (reason, n_docs) per decode
     outcome over the deliberately-corrupted corpus. Oracle replicates the
     exclusive corruption-class CASE relationally."""
-    from zipkin_dependencies_spark.sources.json import (
-        spans_from_json_strings_audited,
-    )
+    from zipkin_dependencies_spark.sources.json import spans_from_json_strings
 
-    _, audit = spans_from_json_strings_audited(
-        _corrupted_span_docs(spark, sf_dir)
-    )
+    _, audit = spans_from_json_strings(_corrupted_span_docs(spark, sf_dir))
     return audit
 
 
@@ -657,13 +653,9 @@ def q_json_hardened_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute to error_count. Oracle derives survivor pairs relationally."""
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.link import links_from_spans
-    from zipkin_dependencies_spark.sources.json import (
-        spans_from_json_strings_audited,
-    )
+    from zipkin_dependencies_spark.sources.json import spans_from_json_strings
 
-    spans, _ = spans_from_json_strings_audited(
-        _corrupted_span_docs(spark, sf_dir)
-    )
+    spans, _ = spans_from_json_strings(_corrupted_span_docs(spark, sf_dir))
     return links_from_spans(normalize_spans(spans))
 
 

@@ -193,6 +193,7 @@ def _v1_fixture(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from __spark_entry__ import SF_SMOKE_DIR
+    from zipkin_dependencies_spark.functions.time import day_window_micros
     from zipkin_dependencies_spark.testdata import derived_v1_tables
 
     spans, annos = derived_v1_tables(spark, SF_SMOKE_DIR)
@@ -208,10 +209,7 @@ def _v1_fixture(spark, tmp_path):
         .first()
         .d
     )
-    start_us = int(
-        dt.datetime(day.year, day.month, day.day, tzinfo=dt.timezone.utc).timestamp()
-    ) * 1_000_000
-    return store, spans, annos, day, (start_us, start_us + 86_400_000_000 - 1)
+    return store, spans, annos, day, day_window_micros(day)
 
 
 def _links_at(spark, path):
@@ -283,3 +281,79 @@ def test_cli_mysql_source_is_not_refiltered_by_the_job(spark, tmp_path, monkeypa
 
     got = _links_at(spark, str(tmp_path / "mysql_links"))
     assert got and got == _links_at(spark, str(tmp_path / "v1_links"))
+
+
+def _doc(trace_id="000000000000000a", **kw):
+    """A v2 JSON span doc (camelCase, as zipkin writes it) on 2016-05-31."""
+    import json
+
+    doc = {"traceId": trace_id, "id": "0000000000000001",
+           "timestamp": 1_464_710_316_000_000}
+    doc.update(kw)
+    return json.dumps(doc)
+
+
+_CLIENT_SERVER = [
+    _doc(kind="CLIENT", localEndpoint={"serviceName": "frontend"},
+         remoteEndpoint={"serviceName": "backend"}),
+    _doc(kind="SERVER", shared=True, localEndpoint={"serviceName": "backend"},
+         remoteEndpoint={"serviceName": "frontend"}),
+]
+
+
+def test_cli_es_source_links_its_daily_index(spark, tmp_path, monkeypatch):
+    """SPAN_FORMAT=es under its own profile (STORAGE_TYPE=elasticsearch,
+    F3 day_partition): the daily index is the day partition, so its spans
+    carry that day and the F3 filter keeps them. Only the connector's load
+    is stubbed; the real decode and day stamp run."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    import zipkin_dependencies_spark.__main__ as cli
+
+    load = DataFrameReader.load
+
+    def fake_load(self, path=None, *args, **kwargs):
+        if path != "zipkin-span-2016-05-31":
+            return load(self, path, *args, **kwargs)
+        return spark.createDataFrame([(d,) for d in _CLIENT_SERVER], "_source string")
+
+    monkeypatch.setattr(DataFrameReader, "load", fake_load)
+    links_path = str(tmp_path / "links")
+    monkeypatch.setenv("STORAGE_TYPE", "elasticsearch")
+    monkeypatch.setenv("SPAN_FORMAT", "es")
+    monkeypatch.setenv("LINKS_PATH", links_path)
+    monkeypatch.setenv("SPARK_MASTER", "local[4]")
+
+    assert cli.main(["2016-05-31"]) == 0
+    assert _links_at(spark, links_path) == [
+        (dt.date(2016, 5, 31), "frontend", "backend", 1, 0)
+    ]
+
+
+def test_cli_json_source_links_only_whole_docs(spark, tmp_path, monkeypatch):
+    """SPAN_FORMAT=json: a day of JSON-lines docs links exactly as its clean
+    docs alone do. A 33-char trace id, a wrong-typed field the job never
+    reads (duration) and a truncated line are skipped whole, as the
+    reference's decoder skips them (TraceIdAndJsonToDependencyLinks.java:38-44)."""
+    import zipkin_dependencies_spark.__main__ as cli
+
+    dirty = [
+        _doc("a" * 33, kind="CLIENT", localEndpoint={"serviceName": "frontend"},
+             remoteEndpoint={"serviceName": "search"}),
+        _doc("000000000000000b", kind="CLIENT", duration="slow",
+             localEndpoint={"serviceName": "frontend"},
+             remoteEndpoint={"serviceName": "cache"}),
+        _doc("000000000000000c", kind="CLIENT")[:40],
+    ]
+    monkeypatch.setenv("SPAN_FORMAT", "json")
+    monkeypatch.setenv("SPARK_MASTER", "local[4]")
+    for name, docs in (("clean", _CLIENT_SERVER), ("dirty", _CLIENT_SERVER + dirty)):
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "spans.json").write_text("".join(d + "\n" for d in docs))
+        monkeypatch.setenv("SPANS_PATH", str(tmp_path / name))
+        monkeypatch.setenv("LINKS_PATH", str(tmp_path / f"{name}_links"))
+        assert cli.main(["2016-05-31"]) == 0
+
+    want = _links_at(spark, str(tmp_path / "clean_links"))
+    assert want == [(dt.date(2016, 5, 31), "frontend", "backend", 1, 0)]
+    assert _links_at(spark, str(tmp_path / "dirty_links")) == want

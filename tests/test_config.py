@@ -208,6 +208,18 @@ class TestEngineEnv:
         with pytest.raises(ValueError, match="LINKS_SINK"):
             engine_env({"LINKS_SINK": "backend"}, "2016-07-16")
 
+    def test_day_partition_needs_a_day_carrying_format(self):
+        # F3 keeps spans by their `day`; these sources set none, so the
+        # run would write zero links (or fail deep in the job)
+        for fmt in ("json", "v1", "mysql", "cassandra"):
+            with pytest.raises(ValueError, match="day_partition"):
+                engine_env({"STORAGE_TYPE": "elasticsearch", "SPAN_FORMAT": fmt}, "2016-07-16")
+            with pytest.raises(ValueError, match="day_partition"):
+                engine_env({"SPAN_FORMAT": fmt, "DAY_FILTER": "day_partition"}, "2016-07-16")
+        for fmt in ("parquet", "es"):
+            env = engine_env({"STORAGE_TYPE": "opensearch", "SPAN_FORMAT": fmt}, "2016-07-16")
+            assert env.day_filter is DayFilter.DAY_PARTITION
+
     def test_unknown_links_sink_raises(self):
         with pytest.raises(ValueError, match="LINKS_SINK"):
             engine_env({"SPAN_FORMAT": "es", "LINKS_SINK": "backnd"}, "2016-07-16")

@@ -902,15 +902,16 @@ def test_memo_family_membership_matches_wiring():
 
 def test_json_decode_parses_each_doc_once(spark):
     # spans_from_json_strings wraps the parse input in a value-identity
-    # nondeterministic expression so the null-filter can't be pushed below
+    # nondeterministic expression so the class filter can't be pushed below
     # the parse projection (guide §4.4 duplicate evaluation: pushed down,
-    # the full-schema from_json is inlined per predicate reference and the
-    # doc is parsed ~3x — measured 0.54 s -> 2.01 s on the 150k-doc noop).
-    # Pin: the whole plan carries exactly ONE from_json occurrence.
+    # the full-schema from_json is inlined per reference of the class CASE
+    # chain and the filter; json_spans_decode's plan held 6 without it).
+    # Pin: each JSON query's plan carries exactly ONE from_json occurrence.
     import __spark_entry__ as e
 
-    plan = formatted(e.q_json_spans_decode(spark, SF))
-    assert plan.count("from_json") == 1, plan
+    for q in (e.q_json_spans_decode, e.q_json_decode_audit, e.q_json_hardened_links):
+        plan = formatted(q(spark, SF))
+        assert plan.count("from_json") == 1, (q.__name__, plan)
 
 
 def test_json_doc_generation_not_single_task(spark):

@@ -54,7 +54,7 @@ def test_json_strings_decode_and_link(spark):
         ],
         ["doc_id", "json"],
     )
-    spans = spans_from_json_strings(raw)
+    spans, _ = spans_from_json_strings(raw)
     assert spans.count() == 2
     links = links_from_spans(normalize_spans(spans))
     out = {(r.parent, r.child): (r.call_count, r.error_count) for r in links.collect()}
@@ -63,7 +63,7 @@ def test_json_strings_decode_and_link(spark):
 
 def test_json_endpoint_shape_maps_to_canonical(spark):
     raw = spark.createDataFrame([("1", span_json())], ["doc_id", "json"])
-    row = spans_from_json_strings(raw).first()
+    row = spans_from_json_strings(raw)[0].first()
     assert row.local_endpoint.service_name == "frontend"
     assert row.remote_endpoint.service_name == "backend"
     assert row.trace_id == "000000000000000a"
@@ -74,10 +74,14 @@ def test_missing_span_path_reads_as_empty(spark, tmp_path):
     (ES_INDEX_READ_MISSING_AS_EMPTY) — a day with no data yet is an empty
     result with the full schema, not a crash."""
     from zipkin_dependencies_spark.schemas import SPAN_SCHEMA
-    from zipkin_dependencies_spark.sources import read_spans_parquet
+    from zipkin_dependencies_spark.sources import read_spans_json, read_spans_parquet
 
     df = read_spans_parquet(spark, str(tmp_path / "nope"))
     assert df.schema == SPAN_SCHEMA and df.count() == 0
+    # a JSON day reads the same way, through the same existence check
+    spans, audit = read_spans_json(spark, str(tmp_path / "nope"))
+    assert spans.columns == SPAN_SCHEMA.names and spans.count() == 0
+    assert audit.count() == 0
 
     import pytest as _pytest
     from pyspark.errors import AnalysisException
@@ -177,19 +181,17 @@ def test_glob_span_path_with_matches_returns_data(spark, tmp_path):
     assert empty.schema == SPAN_SCHEMA and empty.count() == 0
 
 
-def test_audited_decode_pins_skip_counter_per_class(spark):
+def test_audited_decode_pins_skip_counter_per_class(spark, tmp_path):
     """P4 hardening (reference skip-and-log,
     TraceIdAndJsonToDependencyLinks.java:38-44): every corruption class —
     truncated doc, wrong-typed field value, 33-char trace id, missing
     trace id — lands in its own audit bucket with an exact count, and
-    ONLY clean docs reach the span output. The wrong-type case is the
-    load-bearing difference from the plain decoder, which nulls the bad
-    field and keeps a degraded span."""
+    ONLY clean docs reach the span output. Both front-ends (a string
+    column, JSON-lines files) classify alike; the wrong-type case is the
+    one a decoder that nulls the bad field would keep as a degraded span."""
     from pyspark.sql import functions as F
 
-    from zipkin_dependencies_spark.sources.json import (
-        spans_from_json_strings_audited,
-    )
+    from zipkin_dependencies_spark.sources.json import read_spans_json
 
     ok = '{"traceId":"00000000000000ab","id":"000000000000000a","timestamp":7}'
     rows = [
@@ -203,21 +205,24 @@ def test_audited_decode_pins_skip_counter_per_class(spark):
         ('{"id":"a"}',),                                        # missing id
         ('{"traceId":null,"id":"a"}',),                         # null id
     ]
-    spans, audit = spans_from_json_strings_audited(
-        spark.createDataFrame(rows, "json string")
-    )
-    counts = {r.reason: r.n_docs for r in audit.collect()}
-    assert counts == {
-        "ok": 2,
-        "malformed_json": 2,
-        "wrong_type_field": 1,
-        "invalid_trace_id": 2,
-        "missing_trace_id": 2,
-    }
-    got = spans.select("trace_id", "timestamp").collect()
-    assert sorted((r.trace_id, r.timestamp) for r in got) == [
-        ("00000000000000ab", 7),
-        ("00000000000000cd", 7),
-    ]
-    # the audit is exhaustive: every input doc is counted exactly once
-    assert audit.agg(F.sum("n_docs")).collect()[0][0] == len(rows)
+    # blank lines between the docs are not docs: the counts stay exact
+    (tmp_path / "day.json").write_text("\n\n".join(doc for (doc,) in rows) + "\n")
+    for spans, audit in (
+        spans_from_json_strings(spark.createDataFrame(rows, "json string")),
+        read_spans_json(spark, str(tmp_path / "day.json")),
+    ):
+        counts = {r.reason: r.n_docs for r in audit.collect()}
+        assert counts == {
+            "ok": 2,
+            "malformed_json": 2,
+            "wrong_type_field": 1,
+            "invalid_trace_id": 2,
+            "missing_trace_id": 2,
+        }
+        got = spans.select("trace_id", "timestamp").collect()
+        assert sorted((r.trace_id, r.timestamp) for r in got) == [
+            ("00000000000000ab", 7),
+            ("00000000000000cd", 7),
+        ]
+        # the audit is exhaustive: every input doc is counted exactly once
+        assert audit.agg(F.sum("n_docs")).collect()[0][0] == len(rows)

@@ -53,6 +53,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
+    from .functions.time import day_window_micros
     from .session import get_spark
     from .sources import read_spans_json, read_spans_parquet
     from .sources.v1 import v1_to_v2_spans
@@ -69,8 +70,7 @@ def main(argv: list[str] | None = None) -> int:
 
     environ = dict(_os.environ)
     clustered_scan = False
-    start_us = env.day_ms * 1000
-    end_us = start_us + 86_400_000_000 - 1
+    start_us, end_us = day_window_micros(day)
     flavor = (
         "opensearch" if environ.get("STORAGE_TYPE") == "opensearch" else "elasticsearch"
     )
@@ -88,11 +88,11 @@ def main(argv: list[str] | None = None) -> int:
             *window,
         )
     elif env.source_format == "json":
-        spans_df = read_spans_json(spark, env.spans_path)
+        spans_df, _ = read_spans_json(spark, env.spans_path)
     elif env.source_format == "es":
         from .sources.backends import es_conf_from_env, read_spans_es
 
-        spans_df = read_spans_es(
+        spans_df, _ = read_spans_es(
             spark,
             day,
             index_prefix=environ.get("ES_INDEX", "zipkin"),

@@ -213,6 +213,8 @@ _PROFILE = {  # STORAGE_TYPE → (day-filter parity, strict default honored)
 #: whose connectors can also take the links back (LINKS_SINK=backend)
 _FILE_FORMATS = ("parquet", "json", "v1")
 _LIVE_FORMATS = ("es", "cassandra", "mysql")
+#: the SPAN_FORMAT values whose spans carry a ``day`` for F3 to keep
+_DAY_FORMATS = ("parquet", "es")
 
 
 def engine_env(
@@ -227,7 +229,9 @@ def engine_env(
     profiles that honor it apply it (ES grouping is always lenient,
     ElasticsearchDependenciesJob.java:181). An unknown STORAGE_TYPE,
     SPAN_FORMAT or LINKS_SINK raises ValueError, as does LINKS_SINK=backend
-    with a file format, which has no connector to write through."""
+    with a file format, which has no connector to write through, and the
+    F3 day_partition filter over a format whose spans carry no ``day``
+    (it would keep no span)."""
     env = os.environ if environ is None else environ
     storage = env.get("STORAGE_TYPE", "spark")
     if storage not in _PROFILE:
@@ -254,13 +258,21 @@ def engine_env(
         day_ms = now
     day_ms = midnight_utc(day_ms)
 
+    if "DAY_FILTER" in env:
+        day_filter = DayFilter(env["DAY_FILTER"])
+    if day_filter is DayFilter.DAY_PARTITION and source_format not in _DAY_FORMATS:
+        raise ValueError(
+            f"DAY_FILTER=day_partition needs spans that carry a day "
+            f"({' | '.join(_DAY_FORMATS)}), not SPAN_FORMAT={source_format}"
+        )
+
     strict = env.get("STRICT_TRACE_ID", "true").lower() == "true"
     return EngineEnv(
         day_ms=day_ms,
         spans_path=env.get("SPANS_PATH", "spans"),
         links_path=env.get("LINKS_PATH") or None,
         source_format=source_format,
-        day_filter=DayFilter(env["DAY_FILTER"]) if "DAY_FILTER" in env else day_filter,
+        day_filter=day_filter,
         strict_trace_id=strict and honors_strict,
         master=env.get("SPARK_MASTER", "local[*]"),
         spark_conf=parse_spark_conf(env.get("SPARK_CONF")),

@@ -118,13 +118,16 @@ def read_spans_es(
     date_separator: str = "-",
     conf: Mapping[str, str] | None = None,
     flavor: str = "elasticsearch",
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Scan the daily span index ``{prefix}-span-{date}`` as raw JSON docs →
-    v2 span DataFrame (S4 + P4; ElasticsearchDependenciesJob.java:173,180).
+    (spans, audit) (S4 + P4; ElasticsearchDependenciesJob.java:173,180).
 
     The connector reads `_source` as a JSON string per doc when asked for
-    `es.output.json`, which feeds the exact decode path the parquet-hosted
-    JSON source uses (sources/json.py) — one decoder, every backend."""
+    `es.output.json`, which feeds ``sources/json.py::spans_from_json_strings``
+    — the classifier every JSON source decodes through, so a doc the
+    reference's decoder skips is skipped here too. The daily index is the
+    day partition: its spans carry ``day``, so the ES profile's F3 filter
+    keeps them."""
     from .json import spans_from_json_strings
 
     fmt = ES_FORMAT if flavor == "elasticsearch" else OS_FORMAT
@@ -134,10 +137,8 @@ def read_spans_es(
         reader = reader.option(k, v)
     raw = reader.load(es_span_index(index_prefix, day, date_separator))
     # es.output.json=true yields a single string column of _source JSON
-    return spans_from_json_strings(
-        raw.select(F.monotonically_increasing_id().cast("string").alias("doc_id"),
-                   F.col(raw.columns[-1]).alias("json"))
-    )
+    spans, audit = spans_from_json_strings(raw, raw.columns[-1])
+    return spans.withColumn("day", F.lit(day)), audit
 
 
 def es_link_docs(links: DataFrame) -> DataFrame:

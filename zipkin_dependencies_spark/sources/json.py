@@ -1,19 +1,42 @@
 """zipkin v2 JSON span source (SURVEY §2.1 S4, §2.2 P3/P4).
 
 The reference reads ES daily indexes as raw (docId, json) pairs and decodes
-with SpanBytesDecoder.JSON_V2, logging + skipping malformed spans
-(elasticsearch/.../TraceIdAndJsonToDependencyLinks.java:38-44). Spark-first:
-``from_json`` with the explicit schema in PERMISSIVE mode ≙ skip-and-count —
-malformed docs yield null structs we filter out, and a `_corrupt` accumulator
-equivalent is exposed as a countable DataFrame instead of a log line.
+each with SpanBytesDecoder.JSON_V2, logging and skipping any span it cannot
+decode whole (elasticsearch/.../TraceIdAndJsonToDependencyLinks.java:38-44).
+Here one classifier does that for every JSON source: the doc is parsed once
+with the explicit schema in PERMISSIVE mode plus a ``_corrupt`` column,
+every doc gets exactly one outcome class, only ``ok`` docs become spans, and
+the skip-and-log counter is an ``audit`` DataFrame instead of a log line.
+``spans_from_json_strings`` decodes a string column (the ES ``_source``, the
+registered queries); ``read_spans_json`` feeds it the lines of JSON-lines
+files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..schemas import SPAN_JSON_SCHEMA, SPAN_SCHEMA
+from ..schemas import SPAN_JSON_SCHEMA
+from .parquet import _exists
+
+#: the decode schema: the v2 span fields plus PERMISSIVE mode's raw-record
+#: column, set whenever any field of the doc failed to decode
+_DOC_SCHEMA = T.StructType(
+    list(SPAN_JSON_SCHEMA.fields) + [T.StructField("_corrupt", T.StringType())]
+)
+_PERMISSIVE = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"}
+
+#: trace ids are 1-32 hex chars (the reference decoder rejects anything
+#: else before the job sees it; normalize/truncate handles ONLY valid ids)
+_VALID_TRACE_ID = r"^[0-9a-fA-F]{1,32}$"
+
+SKIP_MALFORMED = "malformed_json"
+SKIP_WRONG_TYPE = "wrong_type_field"
+SKIP_MISSING_TRACE = "missing_trace_id"
+SKIP_INVALID_TRACE = "invalid_trace_id"
+DECODE_OK = "ok"
 
 
 def _v2_projection(s: Column) -> list[Column]:
@@ -40,80 +63,35 @@ def _v2_projection(s: Column) -> list[Column]:
     ]
 
 
-def spans_from_json_strings(df: DataFrame, json_col: str = "json") -> DataFrame:
-    """(id, json-string) rows → canonical span columns; malformed JSON rows are
-    dropped (they decode to a null struct). The caller can count skips as
-    ``df.count() - result.count()`` without an extra scan thanks to cache or
-    AQE statistics reuse.
-
-    The parse input is wrapped in a value-identity NONDETERMINISTIC
-    expression (``shuffle`` of a one-element array — a no-op on the value)
-    so the null-filter cannot be pushed below the parse projection: pushed
-    down, PushDownPredicates inlines the full-schema ``from_json`` into
-    each predicate reference and the document is parsed ~3× per row — the
-    guide §4.4 duplicate-evaluation hazard, measured at 0.54 s → 2.01 s on
-    the 150 k-doc noop A/B (codegen subexpression elimination does NOT
-    rescue this shape, unlike the audited decoder's CASE chain, which
-    measured flat with and without the wrapper). Retry-safe: the wrapped
-    value is bit-identical on re-execution, only the optimizer flag
-    changes."""
-    nd_json = F.element_at(F.shuffle(F.array(F.col(json_col))), 1)
-    parsed = df.select(F.from_json(nd_json, SPAN_JSON_SCHEMA).alias("s"))
-    ok = parsed.filter(F.col("s").isNotNull() & F.col("s.traceId").isNotNull())
-    return ok.select(*_v2_projection(F.col("s"))).withColumn(
-        "day", F.lit(None).cast("date")
-    )
-
-
-#: trace ids are 1-32 hex chars (the reference decoder rejects anything
-#: else before the job sees it; normalize/truncate handles ONLY valid ids)
-_VALID_TRACE_ID = r"^[0-9a-fA-F]{1,32}$"
-
-SKIP_MALFORMED = "malformed_json"
-SKIP_WRONG_TYPE = "wrong_type_field"
-SKIP_MISSING_TRACE = "missing_trace_id"
-SKIP_INVALID_TRACE = "invalid_trace_id"
-DECODE_OK = "ok"
-
-
-def spans_from_json_strings_audited(
+def spans_from_json_strings(
     df: DataFrame, json_col: str = "json"
 ) -> tuple[DataFrame, DataFrame]:
-    """Hardened S4/P4 decode: → (spans, audit) where ``audit`` is one row
-    per decode outcome with its doc count — the skip-and-log counter the
-    reference emits per malformed span
-    (elasticsearch/.../TraceIdAndJsonToDependencyLinks.java:38-44)
-    surfaced as a queryable DataFrame instead of a log line.
+    """A string column of v2 JSON span docs → (spans, audit). ``audit`` is
+    one row per outcome class with its doc count; ``spans`` holds the
+    ``ok`` docs as canonical span columns with a null ``day`` (JSON docs
+    carry none; a source that knows the day stamps it).
 
     Outcome classes (each doc gets exactly one; precedence top-down):
-      - ``malformed_json``   — the document is not parseable JSON at all
-        (PERMISSIVE corrupt-record set AND no traceId recovered);
-      - ``wrong_type_field`` — valid JSON but some field's VALUE failed
-        its schema type (corrupt-record set, traceId recovered). The
-        reference decoder throws on these, dropping the span — the plain
-        ``spans_from_json_strings`` would instead silently null the field
-        and keep a degraded span, which is the hazard this path closes;
+      - ``malformed_json``   — not parseable JSON at all (``_corrupt`` set
+        and no traceId recovered);
+      - ``wrong_type_field`` — valid JSON but some field's value failed its
+        schema type (``_corrupt`` set, traceId recovered). The reference
+        decoder throws on these and drops the span; nulling the field and
+        keeping a degraded span would link what the reference does not;
       - ``missing_trace_id`` / ``invalid_trace_id`` — absent, or present
         but not 1-32 hex chars (e.g. a 33-char id);
       - ``ok``               — decoded and admitted to ``spans``.
 
-    One from_json pass; classification is pure Column logic, so the scan
-    stays whole-stage-codegen and the audit aggregate is a 5-row
-    map-side-combined groupBy — negligible against the decode itself."""
-    from pyspark.sql import types as T
-
-    from ..schemas import SPAN_JSON_SCHEMA as _S
-
-    audit_schema = T.StructType(
-        list(_S.fields) + [T.StructField("_corrupt", T.StringType())]
-    )
-    parsed = df.select(
-        F.from_json(
-            F.col(json_col),
-            audit_schema,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("s")
-    )
+    The parse input passes through a value-identity NONDETERMINISTIC
+    wrapper (``shuffle`` of a one-element array — a no-op on the value),
+    so the class filter cannot be pushed below the parse projection.
+    Pushed down, Catalyst inlines the full-schema ``from_json`` into each
+    reference of the CASE chain and the filter (``json_spans_decode``'s
+    plan held 6 of them without it). Wrapping the decoded struct instead
+    also pins it, but copies every doc: 1.42 s against 1.09 s for 150k
+    docs through ``normalize_spans`` to a noop sink on 4 cores. Retry-safe:
+    the wrapped value is bit-identical on re-execution."""
+    doc = F.element_at(F.shuffle(F.array(F.col(json_col))), 1)
     s = F.col("s")
     reason = (
         F.when(
@@ -125,24 +103,31 @@ def spans_from_json_strings_audited(
         .when(~s["traceId"].rlike(_VALID_TRACE_ID), F.lit(SKIP_INVALID_TRACE))
         .otherwise(F.lit(DECODE_OK))
     )
-    classified = parsed.select(s.alias("s"), reason.alias("reason"))
-    audit = classified.groupBy("reason").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+    classified = df.select(
+        F.from_json(doc, _DOC_SCHEMA, _PERMISSIVE).alias("s")
+    ).select(s, reason.alias("reason"))
+    audit = classified.groupBy("reason").agg(F.count(F.lit(1)).alias("n_docs"))
     spans = (
         classified.filter(F.col("reason") == DECODE_OK)
-        .select(*_v2_projection(F.col("s")))
+        .select(*_v2_projection(s))
         .withColumn("day", F.lit(None).cast("date"))
     )
     return spans, audit
 
 
-def read_spans_json(spark: SparkSession, path: str) -> DataFrame:
-    """JSON-lines span files → canonical span columns (explicit schema; the
-    `day` column is absent in raw JSON and set null — use F1 windowing)."""
-    raw = spark.read.schema(SPAN_JSON_SCHEMA).json(path)
-    df = raw.filter(F.col("traceId").isNotNull())
-    # reuse the same projection by wrapping columns into a struct
-    return df.select(F.struct(*[F.col(f.name) for f in SPAN_JSON_SCHEMA.fields]).alias("s")) \
-        .select(*_v2_projection(F.col("s"))) \
-        .withColumn("day", F.lit(None).cast("date"))
+def read_spans_json(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
+    """JSON-lines span files → (spans, audit), one doc per line, through
+    ``spans_from_json_strings``. A missing path is an empty day, as for
+    parquet (``read_spans_parquet``'s ``missing_as_empty``). Raw JSON has
+    no ``day``, so use F1 or F2 windowing.
+
+    Lines are read as text, not through the JSON datasource: the
+    datasource parses only the columns the query reads, so a wrong-typed
+    field the job never reads (``duration``, say) would not set
+    ``_corrupt`` and its doc would be kept."""
+    if _exists(spark, path):
+        # a blank line is no doc (the JSON datasource skips it too)
+        lines = spark.read.text(path).filter(F.trim("value") != "")
+    else:
+        lines = spark.createDataFrame([], "value string")
+    return spans_from_json_strings(lines, "value")

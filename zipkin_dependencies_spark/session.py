@@ -64,9 +64,12 @@ def get_spark(
         # Arrow for the mapInPandas linker and path kernels and pandas
         # interchange
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # PySpark's daemon, minus the zip-archive re-read PySpark triggers
-        # before every Python task (worker_daemon.py). Workers must import
-        # this package at daemon start, as the kernels need it anyway;
+        # PySpark's daemon, minus two costs of $SPARK_HOME's source-only
+        # pyspark.zip (worker_daemon.py): it imports an installed PySpark of
+        # the zip's release instead, with compiled caches, and skips the
+        # zip-archive re-read PySpark triggers before every Python task.
+        # Workers must find this package at daemon start (cwd or
+        # PYTHONPATH), as the kernels need it anyway;
         # SPARK_CONF=spark.python.daemon.module=pyspark.daemon restores the
         # stock daemon
         .config("spark.python.daemon.module", "zipkin_dependencies_spark.worker_daemon")

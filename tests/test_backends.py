@@ -13,11 +13,14 @@ shares the oracle-checked parquet path.
 from __future__ import annotations
 
 from zipkin_dependencies_spark.sources.backends import (
+    OS_FORMAT,
     cassandra_conf_from_env,
     cassandra_connector_conf,
+    cassandra_settings_from_env,
     es_conf_from_env,
     es_connector_conf,
     es_link_docs,
+    es_settings_from_env,
     mysql_config_from_env,
     mysql_jdbc_url,
 )
@@ -127,6 +130,34 @@ def test_cassandra_conf_from_env_truststore():
     assert conf["spark.cassandra.connection.ssl.enabled"] == "true"
     assert conf["spark.cassandra.connection.ssl.trustStore.path"] == "ts.jks"
     assert conf["spark.cassandra.connection.ssl.trustStore.password"] == "pw"
+
+
+# --- one settings object per store -------------------------------------------
+
+def test_store_settings_from_env():
+    """Each store's settings come from its env variables alone, and
+    STORAGE_TYPE=opensearch names the flavor without probing ES_HOSTS."""
+    import tests.test_config as config_tests
+
+    captured: list = []
+    srv = config_tests.TestFlavorProbe._serve([], captured)
+    port = srv.server_address[1]
+    try:
+        es = es_settings_from_env({
+            "STORAGE_TYPE": "opensearch", "ES_HOSTS": f"http://127.0.0.1:{port}",
+            "ES_INDEX": "z", "ES_DATE_SEPARATOR": ".",
+        })
+    finally:
+        srv.shutdown()
+    assert captured == []
+    assert (es.index_prefix, es.date_separator, es.format, es.prefix) == (
+        "z", ".", OS_FORMAT, "opensearch",
+    )
+    assert es.conf["opensearch.nodes"] == f"127.0.0.1:{port}"
+
+    cs = cassandra_settings_from_env({"CASSANDRA_KEYSPACE": "zk", "CASSANDRA_USERNAME": "u"})
+    assert cs.keyspace == "zk"
+    assert cs.conf["spark.cassandra.auth.username"] == "u"
 
 
 # --- MySQL (MySQLDependenciesJob.java:42-48,150-155) -------------------------
@@ -253,11 +284,10 @@ def test_mysql_write_day_upsert_is_rerun_idempotent(spark):
 
 # --- S1 co-partitioned scan declaration (CassandraDependenciesJob.java:220) --
 
-def test_cassandra_scan_split_size_and_clustering_contract():
-    """The live scan declares the token-range split target, and the
-    complete-trace-per-partition property transfers to the linker's group
-    key only in strict mode (lenient low-64 grouping crosses token
-    ranges)."""
+def test_cassandra_scan_clustering_contract():
+    """The live scan's complete-trace-per-partition property transfers to
+    the linker's group key only in strict mode (lenient low-64 grouping
+    crosses token ranges)."""
     from zipkin_dependencies_spark.sources.backends import (
         cassandra_scan_is_trace_clustered,
     )

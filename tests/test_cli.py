@@ -258,7 +258,7 @@ def test_cli_mysql_source_is_not_refiltered_by_the_job(spark, tmp_path, monkeypa
 
     store, spans, annos, day, window = _v1_fixture(spark, tmp_path)
 
-    def fake_read_spans_mysql(spark_, cfg, start_us, end_us, **kwargs):
+    def fake_read_spans_mysql(spark_, cfg, start_us, end_us):
         s = spans.filter(spans.start_ts.between(start_us, end_us))
         a = annos.filter(annos.a_key.isin(*CORE_KEYS))
         return v2_spans_from_link_rows(
@@ -357,3 +357,122 @@ def test_cli_json_source_links_only_whole_docs(spark, tmp_path, monkeypatch):
     want = _links_at(spark, str(tmp_path / "clean_links"))
     assert want == [(dt.date(2016, 5, 31), "frontend", "backend", 1, 0)]
     assert _links_at(spark, str(tmp_path / "dirty_links")) == want
+
+
+def _jvm_options(spark, jobj):
+    """The options a JVM DataFrameReader/DataFrameWriter holds, keys as set."""
+    convert = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+    return dict(convert.asJava(jobj.extraOptions().originalMap()))
+
+
+def test_cli_cassandra_settings_reach_the_connector(spark, monkeypatch):
+    """STORAGE_TYPE=cassandra3 SPAN_FORMAT=cassandra LINKS_SINK=backend: the
+    CASSANDRA_* connector conf rides on both the span scan and the links
+    write, and the scan splits at the fixed size. Only the connector's load
+    and save are stubbed; the real projection, job and doc shape run."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    import zipkin_dependencies_spark.__main__ as cli
+    from zipkin_dependencies_spark.sources.backends import (
+        CASSANDRA_FORMAT,
+        CASSANDRA_SPLIT_SIZE_MB,
+    )
+
+    seen = {}
+    load, save = DataFrameReader.load, DataFrameWriter.save
+
+    def fake_load(self, *args, **kwargs):
+        if self._jreader.source() != CASSANDRA_FORMAT:
+            return load(self, *args, **kwargs)
+        seen["read"] = _jvm_options(spark, self._jreader)
+        ts = 1_464_710_316_000_000
+        return spark.createDataFrame(
+            [
+                ("000000000000000a", None, "1", "CLIENT", ts, ("web",), ("api",), None, None),
+                ("000000000000000a", None, "1", "SERVER", ts, ("api",), ("web",), None, True),
+            ],
+            "trace_id string, parent_id string, id string, kind string, ts long, "
+            "l_ep struct<service:string>, r_ep struct<service:string>, "
+            "tags map<string,string>, shared boolean",
+        ).coalesce(1)  # one partition: the clustered scan's promise holds
+
+    def fake_save(self, *args, **kwargs):
+        if self._jwrite.source() != CASSANDRA_FORMAT:
+            return save(self, *args, **kwargs)
+        seen["write"] = _jvm_options(spark, self._jwrite)
+        seen["rows"] = sorted(map(tuple, self._df.collect()))
+
+    monkeypatch.setattr(DataFrameReader, "load", fake_load)
+    monkeypatch.setattr(DataFrameWriter, "save", fake_save)
+    monkeypatch.delenv("LINKS_PATH", raising=False)
+    monkeypatch.setenv("STORAGE_TYPE", "cassandra3")
+    monkeypatch.setenv("SPAN_FORMAT", "cassandra")
+    monkeypatch.setenv("LINKS_SINK", "backend")
+    monkeypatch.setenv("CASSANDRA_CONTACT_POINTS", "a:9043,b:9043")
+    monkeypatch.setenv("SPARK_MASTER", "local[4]")
+
+    assert cli.main(["2016-05-31"]) == 0
+
+    connection = {
+        "spark.cassandra.connection.host": "a,b",
+        "spark.cassandra.connection.port": "9043",
+    }
+    assert seen["read"].items() >= {
+        **connection,
+        "spark.cassandra.input.split.sizeInMB": CASSANDRA_SPLIT_SIZE_MB,
+        "keyspace": "zipkin2",
+        "table": "span",
+    }.items()
+    assert seen["write"].items() >= {
+        **connection, "keyspace": "zipkin2", "table": "dependency",
+    }.items()
+    assert seen["rows"] == [(dt.date(2016, 5, 31), "web", "api", 1, None)]
+
+
+def test_cli_es_flavor_is_probed_from_es_hosts(spark, tmp_path, monkeypatch):
+    """STORAGE_TYPE=elasticsearch: the S6 probe asks ES_HOSTS for its
+    distribution, and a cluster that answers "opensearch" is read through
+    the OpenSearch connector with opensearch.* options
+    (ZipkinElasticsearchStorage.java:77-128). A local server answers the
+    probe; only the connector's load is stubbed."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    import tests.test_config as config_tests
+    import zipkin_dependencies_spark.__main__ as cli
+    from zipkin_dependencies_spark.sources.backends import OS_FORMAT
+
+    seen = {}
+    load = DataFrameReader.load
+
+    def fake_load(self, path=None, *args, **kwargs):
+        if path != "zipkin-span-2016-05-31":
+            return load(self, path, *args, **kwargs)
+        seen["format"] = self._jreader.source()
+        seen["options"] = _jvm_options(spark, self._jreader)
+        return spark.createDataFrame([(d,) for d in _CLIENT_SERVER], "_source string")
+
+    monkeypatch.setattr(DataFrameReader, "load", fake_load)
+    captured: list = []
+    srv = config_tests.TestFlavorProbe._serve(
+        ['{"version": {"distribution": "opensearch", "number": "2.11.0"}}'], captured
+    )
+    port = srv.server_address[1]
+    links_path = str(tmp_path / "links")
+    monkeypatch.setenv("STORAGE_TYPE", "elasticsearch")
+    monkeypatch.setenv("SPAN_FORMAT", "es")
+    monkeypatch.setenv("ES_HOSTS", f"http://127.0.0.1:{port}")
+    monkeypatch.setenv("LINKS_PATH", links_path)
+    monkeypatch.setenv("SPARK_MASTER", "local[4]")
+    try:
+        assert cli.main(["2016-05-31"]) == 0
+    finally:
+        srv.shutdown()
+
+    assert captured == [None]  # one probe, no ES_USERNAME so no auth header
+    assert seen["format"] == OS_FORMAT
+    assert seen["options"]["opensearch.output.json"] == "true"
+    assert seen["options"]["opensearch.nodes"] == f"127.0.0.1:{port}"
+    assert all(k.startswith("opensearch.") for k in seen["options"])
+    assert _links_at(spark, links_path) == [
+        (dt.date(2016, 5, 31), "frontend", "backend", 1, 0)
+    ]

@@ -115,10 +115,7 @@ def test_v1_pushdown_subquery_matches_reference_shape():
     assert "GROUP BY s.trace_id, s.id, a.a_key" in sql
     assert "parent_id" not in sql.split("GROUP BY")[1]
     assert sql.endswith(") AS link_spans")
-    # 128-bit layout variant selects and groups the high half too
-    sql_high = v1_pushdown_subquery(0, 1, has_trace_id_high=True)
-    assert "SELECT DISTINCT s.trace_id_high," in sql_high
-    assert "GROUP BY s.trace_id_high," in sql_high
+    assert "trace_id_high" not in sql  # PARITY S5: one statement, both layouts
 
 
 def test_v2_spans_from_link_rows_equals_two_table_path(spark):

@@ -3,11 +3,14 @@
 The Spark-native replacement for the reference's
 ``STORAGE_TYPE=<backend> java -jar zipkin-dependencies.jar [date]``
 (main/src/main/java/zipkin2/dependencies/ZipkinDependenciesJob.java:21-87).
-Environment surface (see config.engine_env): STORAGE_TYPE picks the parity
-profile, SPANS_PATH/LINKS_PATH the storage locations, SPAN_FORMAT the source
-adapter (parquet|json|v1|es|cassandra|mysql), LINKS_SINK=backend writes the
-links back through a live format's connector, DAY_FILTER/STRICT_TRACE_ID
-override the profile, SPARK_MASTER/SPARK_CONF/ZIPKIN_LOG_LEVEL the session.
+Environment surface (see config.engine_env, the one place that reads it):
+STORAGE_TYPE picks the parity profile, SPANS_PATH/LINKS_PATH the storage
+locations, SPAN_FORMAT the source adapter (parquet|json|v1|es|cassandra|mysql),
+LINKS_SINK=backend writes the links back through a live format's connector,
+DAY_FILTER/STRICT_TRACE_ID override the profile,
+SPARK_MASTER/SPARK_CONF/ZIPKIN_LOG_LEVEL the session. A live format's store
+settings (sources/backends.py) are built once and serve both its read and
+its write-back.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from .plans.job import DependencyLinksJob, JobConfig
 USAGE = """usage: python -m zipkin_dependencies_spark [yyyy-MM-dd]
 
 Aggregates service dependency links for one UTC day (default: today).
-Configuration is environment-driven, mirroring the reference jar:
+Configuration comes from env variables, mirroring the reference jar:
 
   SPANS_PATH        span table location (required for file formats)
   LINKS_PATH        link sink location (optional: print instead of write)
@@ -35,9 +38,16 @@ Configuration is environment-driven, mirroring the reference jar:
   SPARK_MASTER, SPARK_CONF, ZIPKIN_LOG_LEVEL     session controls
 
 Live formats (es | cassandra | mysql) read through the reference's connector
-surface (ES_HOSTS/ES_USERNAME/..., CASSANDRA_CONTACT_POINTS/...,
-MYSQL_HOST/...) and need the matching connector jar on the classpath; the
-file formats are self-contained.
+surface and need the matching connector jar on the classpath; the file
+formats are self-contained:
+
+  es         ES_HOSTS, ES_USERNAME, ES_PASSWORD, ES_NODES_WAN_ONLY, ES_INDEX,
+             ES_DATE_SEPARATOR; the flavor is probed from ES_HOSTS unless
+             STORAGE_TYPE=opensearch
+  cassandra  CASSANDRA_KEYSPACE, CASSANDRA_CONTACT_POINTS, CASSANDRA_LOCAL_DC,
+             CASSANDRA_USERNAME, CASSANDRA_PASSWORD, CASSANDRA_USE_SSL
+  mysql      MYSQL_HOST, MYSQL_TCP_PORT, MYSQL_DB, MYSQL_USER, MYSQL_PASS,
+             MYSQL_USE_SSL, MYSQL_MAX_CONNECTIONS
 """
 
 
@@ -55,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .functions.time import day_window_micros
     from .session import get_spark
-    from .sources import read_spans_json, read_spans_parquet
+    from .sources import backends, read_spans_json, read_spans_parquet
     from .sources.v1 import v1_to_v2_spans
 
     preexisting = SparkSession.getActiveSession() is not None
@@ -66,14 +76,8 @@ def main(argv: list[str] | None = None) -> int:
     log.info("Running dependency links for %s (filter=%s strict=%s)",
              day, env.day_filter.value, env.strict_trace_id)
 
-    import os as _os
-
-    environ = dict(_os.environ)
     clustered_scan = False
     start_us, end_us = day_window_micros(day)
-    flavor = (
-        "opensearch" if environ.get("STORAGE_TYPE") == "opensearch" else "elasticsearch"
-    )
     # the v1 sources (parquet tables, live mysql) apply the F1 window in
     # their scan, as the reference's pushed WHERE s.start_ts BETWEEN does;
     # their spans carry no timestamp, so the job must not filter again
@@ -90,37 +94,14 @@ def main(argv: list[str] | None = None) -> int:
     elif env.source_format == "json":
         spans_df, _ = read_spans_json(spark, env.spans_path)
     elif env.source_format == "es":
-        from .sources.backends import es_conf_from_env, read_spans_es
-
-        spans_df, _ = read_spans_es(
-            spark,
-            day,
-            index_prefix=environ.get("ES_INDEX", "zipkin"),
-            date_separator=environ.get("ES_DATE_SEPARATOR", "-"),
-            conf=es_conf_from_env(environ, flavor=flavor),
-            flavor=flavor,
-        )
+        spans_df, _ = backends.read_spans_es(spark, day, env.store)
     elif env.source_format == "cassandra":
-        from .sources.backends import (
-            cassandra_scan_is_trace_clustered,
-            read_spans_cassandra,
-        )
-
-        spans_df = read_spans_cassandra(
-            spark, keyspace=environ.get("CASSANDRA_KEYSPACE", "zipkin2")
-        )
+        spans_df = backends.read_spans_cassandra(spark, env.store)
         # strict-mode token-range scans co-locate complete traces: the
         # linker can skip its span-scale shuffle (the spanBy parity path)
-        clustered_scan = cassandra_scan_is_trace_clustered(env.strict_trace_id)
+        clustered_scan = backends.cassandra_scan_is_trace_clustered(env.strict_trace_id)
     elif env.source_format == "mysql":
-        from .sources.backends import mysql_config_from_env, read_spans_mysql
-
-        spans_df = read_spans_mysql(
-            spark,
-            mysql_config_from_env(environ),
-            start_us=start_us,
-            end_us=end_us,
-        )
+        spans_df = backends.read_spans_mysql(spark, env.store, start_us, end_us)
     else:  # parquet (engine_env rejects any other SPAN_FORMAT)
         spans_df = read_spans_parquet(spark, env.spans_path)
 
@@ -136,23 +117,13 @@ def main(argv: list[str] | None = None) -> int:
         ),
     )
     links = job.run(spans_df)
-    if environ.get("LINKS_SINK") == "backend":  # engine_env checked the format
-        from .sources import backends as _b
-
-        if env.source_format == "es":
-            _b.write_links_es(
-                links, day,
-                index_prefix=environ.get("ES_INDEX", "zipkin"),
-                date_separator=environ.get("ES_DATE_SEPARATOR", "-"),
-                conf=_b.es_conf_from_env(environ, flavor=flavor),
-                flavor=flavor,
-            )
-        elif env.source_format == "cassandra":
-            _b.write_links_cassandra(
-                links, day, keyspace=environ.get("CASSANDRA_KEYSPACE", "zipkin2")
-            )
-        else:
-            _b.write_links_mysql(links, day, _b.mysql_config_from_env(environ))
+    if env.write_back:  # engine_env checked that the format is live
+        write = {
+            "es": backends.write_links_es,
+            "cassandra": backends.write_links_cassandra,
+            "mysql": backends.write_links_mysql,
+        }[env.source_format]
+        write(links, day, env.store)
         log.info("Wrote day=%s back to %s", day, env.source_format)
     elif env.links_path is None:
         links.show(100, truncate=False)  # no sink configured: print like a REPL

@@ -1,7 +1,8 @@
 """Driver-side configuration surface (SURVEY §2.9 config table, §2.2 P9, §2.1 S6).
 
-Pure Python, no Spark: these run on the driver before a session exists,
-mirroring the reference's env-and-argv bootstrap
+Pure Python, no Spark session: these run on the driver before one exists
+(only a live SPAN_FORMAT imports ``sources/backends.py``, for its store
+settings), mirroring the reference's env-and-argv bootstrap
 (main/src/main/java/zipkin2/dependencies/ZipkinDependenciesJob.java:21-87).
 Each function cites the reference site whose observable behavior it
 reproduces; unit tests in tests/test_config.py mirror the reference's own
@@ -199,6 +200,9 @@ class EngineEnv:
     master: str
     spark_conf: dict[str, str] = field(default_factory=dict)
     log_level: str = "INFO"
+    #: the live store's settings (sources/backends.py; None for a file format)
+    store: object = None
+    write_back: bool = False          # LINKS_SINK=backend
 
 
 _PROFILE = {  # STORAGE_TYPE → (day-filter parity, strict default honored)
@@ -231,7 +235,8 @@ def engine_env(
     SPAN_FORMAT or LINKS_SINK raises ValueError, as does LINKS_SINK=backend
     with a file format, which has no connector to write through, and the
     F3 day_partition filter over a format whose spans carry no ``day``
-    (it would keep no span)."""
+    (it would keep no span). A live SPAN_FORMAT's store settings are built
+    here too, once per run, from the same environment."""
     env = os.environ if environ is None else environ
     storage = env.get("STORAGE_TYPE", "spark")
     if storage not in _PROFILE:
@@ -266,6 +271,16 @@ def engine_env(
             f"({' | '.join(_DAY_FORMATS)}), not SPAN_FORMAT={source_format}"
         )
 
+    store = None
+    if source_format in _LIVE_FORMATS:
+        from .sources import backends
+
+        store = {
+            "es": backends.es_settings_from_env,
+            "cassandra": backends.cassandra_settings_from_env,
+            "mysql": backends.mysql_config_from_env,
+        }[source_format](env)
+
     strict = env.get("STRICT_TRACE_ID", "true").lower() == "true"
     return EngineEnv(
         day_ms=day_ms,
@@ -277,6 +292,8 @@ def engine_env(
         master=env.get("SPARK_MASTER", "local[*]"),
         spark_conf=parse_spark_conf(env.get("SPARK_CONF")),
         log_level=env.get("ZIPKIN_LOG_LEVEL", "INFO"),
+        store=store,
+        write_back=links_sink == "backend",
     )
 
 

@@ -10,16 +10,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..linker import VALID_KINDS
 from .trace import trace_key
-
-VALID_KINDS = ("CLIENT", "SERVER", "PRODUCER", "CONSUMER")
 
 
 def clean_kind(col: Column | str) -> Column:
     """Lenient kind parse: invalid enum values become NULL (dropped with a
     debug log in the reference, CassandraRowToSpan.java:41-48)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isin(*VALID_KINDS), c)
+    return F.when(c.isin(*sorted(VALID_KINDS)), c)
 
 
 def service_name(col: Column | str) -> Column:

@@ -58,6 +58,7 @@ from collections import deque
 from dataclasses import dataclass, field, replace
 from typing import Iterable, Optional
 
+#: the one span-kind set; the Spark-side kind cleaners test against it too
 VALID_KINDS = frozenset({"CLIENT", "SERVER", "PRODUCER", "CONSUMER"})
 
 

@@ -66,6 +66,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..linker import VALID_KINDS
+
 #: maximum resolved-parent chain depth the relational path proves
 #: acyclicity for; traces deeper than this route to the kernel. Rounds of
 #: the E4 doubling walk = ceil(log2(MAX_DEPTH+1)); r rounds prove exactly
@@ -74,12 +76,10 @@ from pyspark.sql import functions as F
 #: be deep to the single-task kernel).
 MAX_DEPTH = 127
 
-_VALID = ("CLIENT", "SERVER", "PRODUCER", "CONSUMER")
-
 
 def _keyed(spans: DataFrame) -> DataFrame:
     """Narrow projection with the effective kind and a per-span key."""
-    ekind = F.when(F.col("kind").isin(*_VALID), F.col("kind")).when(
+    ekind = F.when(F.col("kind").isin(*sorted(VALID_KINDS)), F.col("kind")).when(
         F.col("kind").isNull()
         & F.col("local_service").isNotNull()
         & F.col("remote_service").isNotNull(),

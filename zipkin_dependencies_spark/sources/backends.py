@@ -8,7 +8,10 @@ Everything here splits into two layers:
    mirrors of the reference's builder logic, unit/contract-tested in
    tests/test_backends.py with no store running (the reference itself
    unit-tests this layer the same way,
-   elasticsearch/.../ElasticsearchDependenciesJobTest.java:33-122).
+   elasticsearch/.../ElasticsearchDependenciesJobTest.java:33-122). Each
+   store's builders end in one frozen settings object (``EsSettings``,
+   ``CassandraSettings``, ``MysqlConfig``) that ``config.engine_env``
+   builds once per run and the store's read and write both take.
 2. **Thin read/write appliers** that hand the option map to
    ``spark.read.format(...)`` / ``df.write.format(...)``. These need the
    connector jar on the classpath (``elasticsearch-spark``,
@@ -37,7 +40,11 @@ from ..config import (
     parse_cassandra_hosts,
     parse_cassandra_port,
     parse_es_hosts,
+    parse_storage_urls,
+    probe_flavor,
 )
+from .jdbc import v1_pushdown_subquery
+from .v1 import v2_spans_from_link_rows
 
 # --- Elasticsearch / OpenSearch ---------------------------------------------
 
@@ -76,7 +83,7 @@ def es_connector_conf(
     - host list reduced to host:port pairs (P9 parsing).
     """
     sysprops = sysprops or {}
-    p = "es" if flavor == "elasticsearch" else "opensearch"
+    p = "opensearch" if flavor == "opensearch" else "es"
     conf = {
         f"{p}.index.read.missing.as.empty": "true",
         f"{p}.nodes.wan.only": "true" if hosts_explicit else wan_only,
@@ -111,13 +118,46 @@ def es_conf_from_env(
     )
 
 
+@dataclass(frozen=True)
+class EsSettings:
+    """One ES/OpenSearch store, read from the environment once per run."""
+
+    index_prefix: str          # ES_INDEX
+    date_separator: str        # ES_DATE_SEPARATOR
+    flavor: str                # STORAGE_TYPE=opensearch, else the S6 probe
+    conf: Mapping[str, str]    # es_conf_from_env
+
+    @property
+    def format(self) -> str:
+        return OS_FORMAT if self.flavor == "opensearch" else ES_FORMAT
+
+    @property
+    def prefix(self) -> str:  # the connector's option namespace
+        return "opensearch" if self.flavor == "opensearch" else "es"
+
+
+def es_settings_from_env(env: Mapping[str, str]) -> EsSettings:
+    """The ES/OS store's settings. ``STORAGE_TYPE=opensearch`` names the
+    flavor; otherwise the S6 probe asks the cluster, as the reference's
+    storage does before its job runs (ZipkinElasticsearchStorage.java:77-128)."""
+    if env.get("STORAGE_TYPE") == "opensearch":
+        flavor = "opensearch"
+    else:
+        flavor = probe_flavor(
+            parse_storage_urls(env.get("ES_HOSTS", "127.0.0.1")),
+            env.get("ES_USERNAME") or None,
+            env.get("ES_PASSWORD") or None,
+        )
+    return EsSettings(
+        index_prefix=env.get("ES_INDEX", "zipkin"),
+        date_separator=env.get("ES_DATE_SEPARATOR", "-"),
+        flavor=flavor,
+        conf=es_conf_from_env(env, flavor=flavor),
+    )
+
+
 def read_spans_es(
-    spark: SparkSession,
-    day: dt.date,
-    index_prefix: str = "zipkin",
-    date_separator: str = "-",
-    conf: Mapping[str, str] | None = None,
-    flavor: str = "elasticsearch",
+    spark: SparkSession, day: dt.date, settings: EsSettings
 ) -> tuple[DataFrame, DataFrame]:
     """Scan the daily span index ``{prefix}-span-{date}`` as raw JSON docs →
     (spans, audit) (S4 + P4; ElasticsearchDependenciesJob.java:173,180).
@@ -130,12 +170,13 @@ def read_spans_es(
     keeps them."""
     from .json import spans_from_json_strings
 
-    fmt = ES_FORMAT if flavor == "elasticsearch" else OS_FORMAT
-    p = "es" if flavor == "elasticsearch" else "opensearch"
-    reader = spark.read.format(fmt).option(f"{p}.output.json", "true")
-    for k, v in (conf or {}).items():
-        reader = reader.option(k, v)
-    raw = reader.load(es_span_index(index_prefix, day, date_separator))
+    s = settings
+    raw = (
+        spark.read.format(s.format)
+        .option(f"{s.prefix}.output.json", "true")
+        .options(**s.conf)
+        .load(es_span_index(s.index_prefix, day, s.date_separator))
+    )
     # es.output.json=true yields a single string column of _source JSON
     spans, audit = spans_from_json_strings(raw, raw.columns[-1])
     return spans.withColumn("day", F.lit(day)), audit
@@ -155,28 +196,30 @@ def es_link_docs(links: DataFrame) -> DataFrame:
     )
 
 
-def write_links_es(
-    links: DataFrame,
-    day: dt.date,
-    index_prefix: str = "zipkin",
-    date_separator: str = "-",
-    conf: Mapping[str, str] | None = None,
-    flavor: str = "elasticsearch",
-) -> None:
+def write_links_es(links: DataFrame, day: dt.date, settings: EsSettings) -> None:
     """Distributed upsert into ``{prefix}-dependency-{date}`` keyed by the
     synthetic doc id (W3; ElasticsearchDependenciesJob.java:198-203 — the one
     reference sink that never collects to the driver; ours follow suit)."""
-    fmt = ES_FORMAT if flavor == "elasticsearch" else OS_FORMAT
-    p = "es" if flavor == "elasticsearch" else "opensearch"
-    writer = es_link_docs(links).write.format(fmt).option(f"{p}.mapping.id", "id")
-    for k, v in (conf or {}).items():
-        writer = writer.option(k, v)
-    writer.mode("append").save(es_dependency_index(index_prefix, day, date_separator))
+    s = settings
+    (
+        es_link_docs(links).write.format(s.format)
+        .option(f"{s.prefix}.mapping.id", "id")
+        .options(**s.conf)
+        .mode("append")
+        .save(es_dependency_index(s.index_prefix, day, s.date_separator))
+    )
 
 
 # --- Cassandra 3 --------------------------------------------------------------
 
 CASSANDRA_FORMAT = "org.apache.spark.sql.cassandra"
+
+#: the scan's token-range → Spark-partition split target (the connector's
+#: ``spark.cassandra.input.split.sizeInMB``), so a 100 TB keyspace arrives in
+#: memory-bounded partitions instead of one task per vnode. Splits always
+#: fall BETWEEN partition keys, so ``cassandra_scan_is_trace_clustered``
+#: holds at any split size.
+CASSANDRA_SPLIT_SIZE_MB = "64"
 
 
 def cassandra_connector_conf(
@@ -223,6 +266,22 @@ def cassandra_conf_from_env(
     )
 
 
+@dataclass(frozen=True)
+class CassandraSettings:
+    """One Cassandra store, read from the environment once per run."""
+
+    keyspace: str              # CASSANDRA_KEYSPACE
+    conf: Mapping[str, str]    # cassandra_conf_from_env
+
+
+def cassandra_settings_from_env(env: Mapping[str, str]) -> CassandraSettings:
+    """CASSANDRA_KEYSPACE and the connector conf (CassandraDependenciesJob.java:54-84)."""
+    return CassandraSettings(
+        keyspace=env.get("CASSANDRA_KEYSPACE", "zipkin2"),
+        conf=cassandra_conf_from_env(env),
+    )
+
+
 def cassandra_scan_is_trace_clustered(strict_trace_id: bool) -> bool:
     """Whether the Cassandra scan's partitioning co-locates complete traces
     — the reference's ``spanBy`` token-range exploitation
@@ -239,38 +298,23 @@ def cassandra_scan_is_trace_clustered(strict_trace_id: bool) -> bool:
     return strict_trace_id
 
 
-def read_spans_cassandra(
-    spark: SparkSession,
-    keyspace: str = "zipkin2",
-    input_split_size_mb: int | None = 64,
-) -> DataFrame:
+def read_spans_cassandra(spark: SparkSession, settings: CassandraSettings) -> DataFrame:
     """Full scan of ``{keyspace}.span`` (S1 — deliberately NO server-side day
     predicate; time filtering is per-trace downstream, F2;
     CassandraDependenciesJob.java:177). Token-range partitioning and column
     pruning are the connector's job: unlike the reference's client-side
     full-row fetch (SURVEY §4 "known inefficiency we must NOT replicate"),
-    the DataFrame projection prunes at the CQL level.
-
-    ``input_split_size_mb`` declares the token-range → Spark-partition
-    split target (the connector's ``spark.cassandra.input.split.sizeInMB``)
-    so a 100 TB keyspace arrives in memory-bounded partitions instead of
-    one task per vnode. Splits always fall BETWEEN partition keys, so the
-    complete-trace-per-partition property
-    (``cassandra_scan_is_trace_clustered``) survives any split size —
-    strict-mode jobs can run the linker with ``clustered=True`` and skip
-    the span-scale shuffle entirely."""
-    from ..schemas import SPAN_SCHEMA  # noqa: F401  (shape documented here)
-
-    reader = (
+    the DataFrame projection prunes at the CQL level. The connector conf
+    rides as reader options, and the scan splits at
+    ``CASSANDRA_SPLIT_SIZE_MB``."""
+    raw = (
         spark.read.format(CASSANDRA_FORMAT)
         .option("table", "span")
-        .option("keyspace", keyspace)
+        .option("keyspace", settings.keyspace)
+        .option("spark.cassandra.input.split.sizeInMB", CASSANDRA_SPLIT_SIZE_MB)
+        .options(**settings.conf)
+        .load()
     )
-    if input_split_size_mb is not None:
-        reader = reader.option(
-            "spark.cassandra.input.split.sizeInMB", str(input_split_size_mb)
-        )
-    raw = reader.load()
     # project the 9 consumed fields into canonical v2 shape (P1;
     # CassandraRowToSpan.java:25-63). UDT l_ep/r_ep arrive as structs.
     return raw.select(
@@ -296,7 +340,7 @@ def read_spans_cassandra(
 
 
 def write_links_cassandra(
-    links: DataFrame, day: dt.date, keyspace: str = "zipkin2"
+    links: DataFrame, day: dt.date, settings: CassandraSettings
 ) -> None:
     """Append into ``{keyspace}.dependency(day, parent, child, calls,
     errors)`` — idempotent by primary key (day, parent, child), so re-runs
@@ -314,7 +358,8 @@ def write_links_cassandra(
         )
         .write.format(CASSANDRA_FORMAT)
         .option("table", "dependency")
-        .option("keyspace", keyspace)
+        .option("keyspace", settings.keyspace)
+        .options(**settings.conf)
         .mode("append")
         .save()
     )
@@ -324,6 +369,9 @@ def write_links_cassandra(
 
 @dataclass(frozen=True)
 class MysqlConfig:
+    """One MySQL store, read from the environment once per run
+    (``mysql_config_from_env``)."""
+
     url: str
     user: str
     password: str
@@ -359,29 +407,21 @@ def mysql_config_from_env(env: Mapping[str, str]) -> MysqlConfig:
 
 
 def read_spans_mysql(
-    spark: SparkSession,
-    cfg: MysqlConfig,
-    start_us: int,
-    end_us: int,
-    has_trace_id_high: bool = False,
-    trace_id_bounds: tuple[int, int] | None = None,
+    spark: SparkSession, cfg: MysqlConfig, start_us: int, end_us: int
 ) -> DataFrame:
-    """v2 spans from a live zipkin v1 MySQL store: the pushed subquery scan
-    (S2/S3) range-partitioned across ``max_connections`` parallel reads —
-    the reference's connection budget doubles as our JDBC fan-out."""
-    from .jdbc import read_v1_jdbc
-
-    return read_v1_jdbc(
-        spark,
-        url=cfg.url,
-        start_us=start_us,
-        end_us=end_us,
-        user=cfg.user or None,
-        password=cfg.password or None,
-        has_trace_id_high=has_trace_id_high,
-        num_partitions=cfg.max_connections,
-        trace_id_bounds=trace_id_bounds,
+    """v2 spans from a live zipkin v1 MySQL store: the pushed subquery
+    (S2/S3, ``jdbc.py::v1_pushdown_subquery``) read as one query over one
+    connection, as the reference reads it; the database returns only the
+    day's joined link rows, which ``v2_spans_from_link_rows`` pivots."""
+    rows = (
+        spark.read.format("jdbc")
+        .option("url", cfg.url)
+        .option("dbtable", v1_pushdown_subquery(start_us, end_us))
+        .option("user", cfg.user)
+        .option("password", cfg.password)
+        .load()
     )
+    return v2_spans_from_link_rows(rows)
 
 
 #: the exact day-scope statement issued before every MySQL links write —

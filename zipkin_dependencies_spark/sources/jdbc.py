@@ -1,83 +1,42 @@
-"""JDBC v1 source: the reference's MySQL pushdown, Spark-native (SURVEY §2.1
+"""JDBC v1 pushdown: the reference's MySQL subquery, Spark-native (SURVEY §2.1
 S2/S3).
 
 The reference wraps its filter+join+distinct as a ``dbtable`` subquery so the
 database executes it and only result rows cross the wire
 (mysql/.../MySQLDependenciesJob.java:185-209). Same move here: Catalyst's
-JDBC relation takes the subquery verbatim; ``partitionColumn=trace_id`` splits
-the read into parallel range queries so a 1000-executor cluster doesn't
-funnel through one connection.
+JDBC relation takes the subquery verbatim, and
+``sources/backends.py::read_spans_mysql`` reads it as one query, as the
+reference does.
 
 No live database exists in this environment, so the connector is covered by
-contract tests on the generated SQL and reader options (tests/test_sources.py)
-rather than an integration run; the downstream row adapter
-(``v2_spans_from_link_rows``) shares every line of pivot/matrix logic with
-the fully oracle-checked parquet v1 path.
+contract tests on the generated SQL (tests/test_sources.py) rather than an
+integration run; the downstream row adapter (``v2_spans_from_link_rows``)
+shares every line of pivot/matrix logic with the fully oracle-checked
+parquet v1 path.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .v1 import CORE_KEYS, v2_spans_from_link_rows
+from .v1 import CORE_KEYS
 
 LINK_FIELDS = "s.trace_id, s.parent_id, s.id, a.a_key, a.endpoint_service_name, a.a_type"
 
 
-def v1_pushdown_subquery(start_us: int, end_us: int, has_trace_id_high: bool = False) -> str:
+def v1_pushdown_subquery(start_us: int, end_us: int) -> str:
     """The pushed SELECT, textually equivalent to the reference's
     (MySQLDependenciesJob.java:185-196): day window on every span (F1),
     core-annotation key filter (F4), DISTINCT via GROUP BY all-but-parent_id
-    (D2). ``trace_id_high`` is selected when the probed schema has it, and
-    ignored for linking either way (DependencyLinkSpanIterator.java:72-75)."""
+    (D2). ``trace_id_high`` is never selected: linking ignores it
+    (DependencyLinkSpanIterator.java:72-75), so one statement serves both
+    v1 schema layouts (PARITY S5)."""
     keys = ", ".join(f"'{k}'" for k in CORE_KEYS)
-    high = "s.trace_id_high, " if has_trace_id_high else ""
-    group_high = "s.trace_id_high, " if has_trace_id_high else ""
     return (
-        f"(SELECT DISTINCT {high}{LINK_FIELDS} "
+        f"(SELECT DISTINCT {LINK_FIELDS} "
         "FROM zipkin_spans s "
         "LEFT OUTER JOIN zipkin_annotations a ON "
         "(s.trace_id = a.trace_id AND s.id = a.span_id "
         f"AND a.a_key IN ({keys})) "
         f"WHERE s.start_ts BETWEEN {int(start_us)} AND {int(end_us)} "
-        f"GROUP BY {group_high}s.trace_id, s.id, a.a_key, "
+        "GROUP BY s.trace_id, s.id, a.a_key, "
         "a.endpoint_service_name, a.a_type) AS link_spans"
     )
-
-
-def read_v1_jdbc(
-    spark: SparkSession,
-    url: str,
-    start_us: int,
-    end_us: int,
-    user: str | None = None,
-    password: str | None = None,
-    has_trace_id_high: bool = False,
-    num_partitions: int = 32,
-    trace_id_bounds: tuple[int, int] | None = None,
-) -> DataFrame:
-    """→ v2 spans straight from a zipkin v1 JDBC store.
-
-    With ``trace_id_bounds=(lo, hi)`` the scan range-partitions on
-    ``trace_id`` into ``num_partitions`` parallel queries (Spark's JDBC
-    source requires explicit bounds; fetch them once with
-    ``SELECT min(trace_id), max(trace_id)`` driver-side). Without bounds the
-    read is a single query — correct, serial, fine for small windows."""
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", v1_pushdown_subquery(start_us, end_us, has_trace_id_high))
-    )
-    if trace_id_bounds is not None:
-        lo, hi = trace_id_bounds
-        reader = (
-            reader.option("partitionColumn", "trace_id")
-            .option("lowerBound", int(lo))
-            .option("upperBound", int(hi))
-            .option("numPartitions", num_partitions)
-        )
-    if user is not None:
-        reader = reader.option("user", user)
-    if password is not None:
-        reader = reader.option("password", password)
-    return v2_spans_from_link_rows(reader.load())

@@ -214,8 +214,6 @@ class TestEngineEnv:
         for fmt in ("json", "v1", "mysql", "cassandra"):
             with pytest.raises(ValueError, match="day_partition"):
                 engine_env({"STORAGE_TYPE": "elasticsearch", "SPAN_FORMAT": fmt}, "2016-07-16")
-            with pytest.raises(ValueError, match="day_partition"):
-                engine_env({"SPAN_FORMAT": fmt, "DAY_FILTER": "day_partition"}, "2016-07-16")
         for fmt in ("parquet", "es"):
             env = engine_env({"STORAGE_TYPE": "opensearch", "SPAN_FORMAT": fmt}, "2016-07-16")
             assert env.day_filter is DayFilter.DAY_PARTITION
@@ -241,13 +239,11 @@ class TestEngineEnv:
             {
                 "SPARK_MASTER": "local[4]",
                 "SPARK_CONF": "spark.x=1,spark.y=2",
-                "DAY_FILTER": "span_window",
             },
             "2016-07-16",
         )
         assert env.master == "local[4]"
         assert env.spark_conf == {"spark.x": "1", "spark.y": "2"}
-        assert env.day_filter is DayFilter.SPAN_WINDOW
 
 
 class TestEsIndexNaming:
@@ -342,20 +338,3 @@ class TestFlavorProbe:
             srv.shutdown()
         assert flavor == "elasticsearch"
         assert captured == [None]
-
-
-def test_worker_logging_honors_env(monkeypatch):
-    """Executor log bootstrap (LogInitializer parity): the worker-side init
-    reads ZIPKIN_LOG_LEVEL from its environment and sets the engine logger;
-    repeat calls are free (idempotence guard)."""
-    import importlib
-    import logging
-
-    from zipkin_dependencies_spark import worker_logging
-
-    importlib.reload(worker_logging)  # reset the module-level guard
-    monkeypatch.setenv("ZIPKIN_LOG_LEVEL", "DEBUG")
-    log = worker_logging.init_worker_logging()
-    assert log.level == logging.DEBUG
-    # second call: no reconfiguration (flag set), same logger back
-    assert worker_logging.init_worker_logging() is log

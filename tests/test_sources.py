@@ -83,12 +83,6 @@ def test_missing_span_path_reads_as_empty(spark, tmp_path):
     assert spans.columns == SPAN_SCHEMA.names and spans.count() == 0
     assert audit.count() == 0
 
-    import pytest as _pytest
-    from pyspark.errors import AnalysisException
-
-    with _pytest.raises(AnalysisException):
-        read_spans_parquet(spark, str(tmp_path / "nope"), missing_as_empty=False)
-
 
 def test_job_on_missing_store_yields_empty_links(spark, tmp_path):
     import datetime as dt
@@ -159,9 +153,10 @@ def test_v2_spans_from_link_rows_equals_two_table_path(spark):
     assert via_tables.exceptAll(via_rows).count() == 0
 
 def test_glob_span_path_with_matches_returns_data(spark, tmp_path):
-    """missing_as_empty must expand globs, not test them literally: a valid
-    glob over existing day partitions returns the data; a glob matching
-    nothing (and a genuinely absent literal path) still reads as empty."""
+    """The missing-path check must expand globs, not test them literally: a
+    valid glob over existing day partitions returns the data; a glob
+    matching nothing (and a genuinely absent literal path) still reads as
+    empty."""
     from zipkin_dependencies_spark.schemas import SPAN_SCHEMA
     from zipkin_dependencies_spark.sources import read_spans_parquet
 

@@ -4,10 +4,11 @@ The Spark-native replacement for the reference's
 ``STORAGE_TYPE=<backend> java -jar zipkin-dependencies.jar [date]``
 (main/src/main/java/zipkin2/dependencies/ZipkinDependenciesJob.java:21-87).
 Environment surface (see config.engine_env, the one place that reads it):
-STORAGE_TYPE picks the parity profile, SPANS_PATH/LINKS_PATH the storage
-locations, SPAN_FORMAT the source adapter (parquet|json|v1|es|cassandra|mysql),
+STORAGE_TYPE picks the parity profile (and so the day filter),
+SPANS_PATH/LINKS_PATH the storage locations, SPAN_FORMAT the source adapter
+(parquet|json|v1|es|cassandra|mysql),
 LINKS_SINK=backend writes the links back through a live format's connector,
-DAY_FILTER/STRICT_TRACE_ID override the profile,
+STRICT_TRACE_ID overrides the profile's grouping,
 SPARK_MASTER/SPARK_CONF/ZIPKIN_LOG_LEVEL the session. A live format's store
 settings (sources/backends.py) are built once and serve both its read and
 its write-back.
@@ -32,7 +33,6 @@ Configuration comes from env variables, mirroring the reference jar:
   LINKS_PATH        link sink location (optional: print instead of write)
   SPAN_FORMAT       parquet | json | v1 | es | cassandra | mysql (default parquet)
   STORAGE_TYPE      cassandra3 | mysql | elasticsearch | opensearch parity profile
-  DAY_FILTER        trace_root | span_window | day_partition (profile default)
   STRICT_TRACE_ID   false => group by low 64 bits (profile default)
   LINKS_SINK        backend => write links back through the live connector
   SPARK_MASTER, SPARK_CONF, ZIPKIN_LOG_LEVEL     session controls

@@ -263,11 +263,10 @@ def engine_env(
         day_ms = now
     day_ms = midnight_utc(day_ms)
 
-    if "DAY_FILTER" in env:
-        day_filter = DayFilter(env["DAY_FILTER"])
     if day_filter is DayFilter.DAY_PARTITION and source_format not in _DAY_FORMATS:
         raise ValueError(
-            f"DAY_FILTER=day_partition needs spans that carry a day "
+            f"STORAGE_TYPE={storage} keeps spans by day_partition, which needs "
+            f"a SPAN_FORMAT whose spans carry a day "
             f"({' | '.join(_DAY_FORMATS)}), not SPAN_FORMAT={source_format}"
         )
 

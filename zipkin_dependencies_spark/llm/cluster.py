@@ -55,12 +55,6 @@ _COMPONENT_MEMO: dict[tuple, DataFrame] = register_memo({})
 _CC_ROWS_PER_PARTITION = 250_000
 
 
-def clear_component_memo() -> None:
-    """Drop all memoized component tables (see memo.clear_all_memos for
-    the bench-wide reset; kept for direct callers)."""
-    _COMPONENT_MEMO.clear()
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",

@@ -25,18 +25,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: the projected fields that define span identity for dedup purposes
-SPAN_IDENTITY_COLS = [
-    "trace_key",
-    "parent_id",
-    "id",
-    "kind",
-    "local_service",
-    "remote_service",
-    "shared",
-    "is_error",
-    "timestamp",
-]
+from ..schemas import LINK_INPUT_SCHEMA
+
+#: the projected fields that define span identity for dedup purposes: all
+#: of the linker's input columns
+SPAN_IDENTITY_COLS = LINK_INPUT_SCHEMA.fieldNames()
 
 
 def dedupe_spans(normalized_spans: DataFrame) -> DataFrame:

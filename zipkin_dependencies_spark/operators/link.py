@@ -1,11 +1,15 @@
 """The per-trace linking operator — the one non-relational kernel (SURVEY §2.6).
 
-Spark mapping: ``repartition(trace_key)`` + ``sortWithinPartitions`` + one
-``mapInPandas`` pass over the Arrow channel. ``_sorted_groups`` cuts each
-task's sorted span stream into complete traces as column lists, and
-``linker.link_columns`` links each one on integer slots (no ``Span``
-objects) — the reference's per-task linker over a trace-sorted row
-stream (mysql/.../DependencyLinkSpanIterator.java:25-56). The path walker
+Spark mapping: ``repartition(trace_key)`` + ``sortWithinPartitions`` +
+``kernel_input`` + one ``mapInPandas`` pass over the Arrow channel.
+``kernel_input`` is the kernel's input contract: one JVM projection applies
+its null rules, as the reference's row mappers normalize a span before
+linking (cassandra3/.../CassandraRowToSpan.java:38-59), so the Python side
+only links. ``_sorted_groups`` cuts each task's sorted span stream into
+complete traces as column lists, and ``linker.link_columns`` links each one
+on integer slots (no ``Span`` objects) — the reference's per-task linker
+over a trace-sorted row stream
+(mysql/.../DependencyLinkSpanIterator.java:25-56). The path walker
 (operators/paths.py) runs its per-trace chain walk on the same helper.
 Output is the per-partition link table, which the global A2 aggregation
 then sums. Map-side cost is bounded: the kernel's output cardinality is
@@ -27,7 +31,7 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 from itertools import chain
-from typing import Callable, Iterable, Iterator, Sequence
+from typing import Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -38,61 +42,51 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..linker import DependencyLinker, link_columns, roots_in_day_window
-from ..schemas import TRACE_LINKS_SCHEMA
+from ..schemas import LINK_INPUT_SCHEMA, TRACE_LINKS_SCHEMA
 from .aggregate import aggregate_links
 
 #: fraction of spans the seeded heavy-trace pre-pass samples (see
 #: ``_heavy_trace_keys``)
 HEAVY_SAMPLE_FRACTION = 0.05
 
-#: the LINK_INPUT_SCHEMA columns the linker reads: ``link_columns``'
-#: arguments, then the F2 window's timestamp
-_SPAN_COLS = (
-    "parent_id", "id", "kind", "local_service", "remote_service",
-    "shared", "is_error", "timestamp",
-)
+#: the columns the kernel reads, in LINK_INPUT_SCHEMA order after
+#: ``trace_key``: ``link_columns``' arguments, then the F2 window's timestamp
+_SPAN_COLS = LINK_INPUT_SCHEMA.fieldNames()[1:]
 
 
-def _strings(values: list) -> list:
-    return [v if isinstance(v, str) else None for v in values]
-
-
-def _flags(values: list) -> list:
-    return [bool(v) if v is not None and v == v else False for v in values]
-
-
-def _longs(values: list) -> list:
-    return [int(v) if v is not None and v == v else None for v in values]
-
-
-#: the linker's null rules per ``_SPAN_COLS`` column. Arrow nulls may
-#: arrive as None or NaN: a non-string id/service becomes None, a null flag
-#: False, a null timestamp None
-_NULL_RULES = (*(_strings,) * 5, _flags, _flags, _longs)
-
-
-def span_lists(cols: Sequence[list]) -> list[list]:
-    """``_SPAN_COLS``-ordered column lists (a shorter prefix is fine) → the
-    same lists under the linker's null rules."""
-    return [rule(c) for rule, c in zip(_NULL_RULES, cols)]
+def kernel_input(spans: DataFrame) -> DataFrame:
+    """The linker kernel's input contract: its null rules, applied once on
+    the JVM. A null ``shared`` or ``is_error`` is false, and a null
+    ``timestamp`` is 0, which the F2 window already treats as missing
+    (``roots_in_day_window``); Arrow would hand the kernel that null as a
+    float NaN. Strings need no rule: Arrow delivers them as ``str`` or
+    None. Columns are replaced in place, so a caller's extra columns (the
+    multi-day ``day``, a stream's watermark column) pass through."""
+    return spans.withColumns(
+        {
+            "shared": F.coalesce("shared", F.lit(False)),
+            "is_error": F.coalesce("is_error", F.lit(False)),
+            "timestamp": F.coalesce("timestamp", F.lit(0)),
+        }
+    )
 
 
 def _sorted_groups(
     batches: Iterable[pd.DataFrame],
     key_cols: Sequence[str],
     value_cols: Sequence[str],
-    to_lists: Callable[[list[list]], list[list]] | None = None,
 ) -> Iterator[tuple[tuple, list]]:
     """Cut a partition's key-sorted Arrow batch stream into complete groups.
 
     Yields ``(key, columns)`` once per group, in stream order: ``key`` is
     the tuple of the group's ``key_cols`` values, ``columns`` one list per
     ``value_cols`` entry. Each batch's value columns become Python lists
-    once, then pass through ``to_lists`` when given. A group is
-    yielded when the next key (or the end of the stream) closes it, so a
-    group that straddles Arrow batches arrives whole: its per-batch slices
-    are kept and concatenated once. Memory stays O(batch + open group),
-    never O(partition)."""
+    once, as Arrow delivers them: a caller that needs null rules applies
+    them on the JVM first (``kernel_input``, ``trace_paths``' ``svc``
+    coalesce). A group is yielded when the next key (or the end of the
+    stream) closes it, so a group that straddles Arrow batches arrives
+    whole: its per-batch slices are kept and concatenated once. Memory
+    stays O(batch + open group), never O(partition)."""
     open_key: tuple | None = None
     chunks: list[list] = []
     for pdf in batches:
@@ -101,8 +95,6 @@ def _sorted_groups(
             continue
         keys = [pdf[c].to_numpy() for c in key_cols]
         cols = [pdf[c].to_numpy().tolist() for c in value_cols]
-        if to_lists is not None:
-            cols = to_lists(cols)
         # boundary where ANY key column changes between adjacent rows
         changed = keys[0][1:] != keys[0][:-1]
         for k in keys[1:]:
@@ -155,9 +147,10 @@ def trace_links_partitioned(
 ) -> DataFrame:
     """LINK_INPUT_SCHEMA rows → per-partition links (pre-aggregation).
 
-    repartition by trace_key + sortWithinPartitions, then one mapInPandas
-    pass that links each complete trace ``_sorted_groups`` cuts from the
-    partition's sorted stream (the reference's MySQL sorted-iterator shape,
+    repartition by trace_key + sortWithinPartitions + ``kernel_input``'s
+    null rules, then one mapInPandas pass that links each complete trace
+    ``_sorted_groups`` cuts from the partition's sorted stream (the
+    reference's MySQL sorted-iterator shape,
     mysql/.../DependencyLinkSpanIterator.java:25-56, done with a secondary
     sort instead of a peeking iterator).
 
@@ -224,14 +217,10 @@ def trace_links_partitioned(
     )
 
     def link_partition(batches: Iterable[pd.DataFrame]):
-        from ..worker_logging import init_worker_logging
-
-        init_worker_logging()  # executor-side ZIPKIN_LOG_LEVEL bootstrap
-
         # one accumulator per (task, day) = the reference's per-task linker
         # (CassandraRowsToDependencyLinks) doubling as the map-side combiner
         linkers: dict = {}
-        for key, cols in _sorted_groups(batches, group_cols, _SPAN_COLS, span_lists):
+        for key, cols in _sorted_groups(batches, group_cols, _SPAN_COLS):
             if window is not None and not roots_in_day_window(
                 cols[0], cols[7], *window
             ):
@@ -251,17 +240,13 @@ def trace_links_partitioned(
         ]
         yield pd.DataFrame(rows, columns=out_cols)
 
-    if clustered:
-        # bucketed input: complete traces per partition by construction;
-        # only the in-partition sort (no exchange) remains
-        return normalized_spans.sortWithinPartitions(*order_cols).mapInPandas(
-            link_partition, schema=schema
-        )
-    return (
-        normalized_spans.repartition(*group_cols)
-        .sortWithinPartitions(*order_cols)
-        .mapInPandas(link_partition, schema=schema)
-    )
+    if not clustered:
+        normalized_spans = normalized_spans.repartition(*group_cols)
+    # bucketed input (clustered) holds complete traces per partition by
+    # construction: only the in-partition sort remains. The null rules go
+    # after the sort, so the kernel sees rows in exactly the sorted order
+    sorted_spans = normalized_spans.sortWithinPartitions(*order_cols)
+    return kernel_input(sorted_spans).mapInPandas(link_partition, schema=schema)
 
 
 def links_from_spans(

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..linker import VALID_KINDS
+from .link import kernel_input
 
 #: maximum resolved-parent chain depth the relational path proves
 #: acyclicity for; traces deeper than this route to the kernel. Rounds of
@@ -78,23 +79,24 @@ MAX_DEPTH = 127
 
 
 def _keyed(spans: DataFrame) -> DataFrame:
-    """Narrow projection with the effective kind and a per-span key."""
+    """Narrow projection with the effective kind and a per-span key, under
+    the kernel's null rules (``link.kernel_input``)."""
     ekind = F.when(F.col("kind").isin(*sorted(VALID_KINDS)), F.col("kind")).when(
         F.col("kind").isNull()
         & F.col("local_service").isNotNull()
         & F.col("remote_service").isNotNull(),
         F.lit("CLIENT"),
     )
-    return spans.select(
+    return kernel_input(spans).select(
         "trace_key",
         "parent_id",
         "id",
-        F.coalesce(F.col("shared"), F.lit(False)).alias("shared"),
+        "shared",
         F.col("kind").alias("raw_kind"),
         ekind.alias("ekind"),
         "local_service",
         "remote_service",
-        F.coalesce(F.col("is_error"), F.lit(False)).alias("is_error"),
+        "is_error",
     )
 
 

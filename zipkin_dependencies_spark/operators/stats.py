@@ -48,8 +48,6 @@ from pyspark.sql import functions as F
 
 from .rank import distributed_prefix_sums
 
-KS_SCHEMA = "n_a bigint, n_b bigint, n_vals bigint, at_v bigint, ks_q6 bigint"
-
 
 def ks_statistic(
     df: DataFrame,

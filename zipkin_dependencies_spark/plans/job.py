@@ -2,7 +2,8 @@
 
 config → SparkSession → source adapter → normalize to the v2 span frame →
 day-filter variant (F1/F2/F3, default F2 parity) → repartition(trace_key) →
-dedupe → sortWithinPartitions → mapInPandas(linker per trace, via
+dedupe → sortWithinPartitions → the kernel's null rules
+(operators/link.py::kernel_input) → mapInPandas(linker per trace, via
 operators/link.py::_sorted_groups) → groupBy(parent, child).agg(sum, sum)
 → day-partition overwrite write.
 

@@ -111,17 +111,6 @@ TRACE_LINKS_SCHEMA = T.StructType(
     ]
 )
 
-#: Golden output shape (FIXTURES.md §F3): unique key (day, parent, child).
-DEPENDENCY_LINK_SCHEMA = T.StructType(
-    [
-        T.StructField("day", T.DateType()),
-        T.StructField("parent", T.StringType()),
-        T.StructField("child", T.StringType()),
-        T.StructField("call_count", T.LongType()),
-        T.StructField("error_count", T.LongType()),
-    ]
-)
-
 #: v1 two-table shapes (FIXTURES.md §F2, MySQL parity).
 V1_SPANS_SCHEMA = T.StructType(
     [

@@ -85,14 +85,6 @@ def get_spark(
     )
     if master.startswith("local"):
         builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-    # executor log bootstrap (the reference ships a LogInitializer Runnable to
-    # executors, main/.../LogInitializer.java:1-99): propagate the requested
-    # level into every executor's environment so Python workers — the only
-    # engine code that runs out there — configure logging to match; see
-    # worker_logging.init_worker_logging, called at kernel entry.
-    log_level = os.environ.get("ZIPKIN_LOG_LEVEL")
-    if log_level:
-        builder = builder.config("spark.executorEnv.ZIPKIN_LOG_LEVEL", log_level)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -118,8 +118,8 @@ def spans_from_json_strings(
 def read_spans_json(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """JSON-lines span files → (spans, audit), one doc per line, through
     ``spans_from_json_strings``. A missing path is an empty day, as for
-    parquet (``read_spans_parquet``'s ``missing_as_empty``). Raw JSON has
-    no ``day``, so use F1 or F2 windowing.
+    parquet (``read_spans_parquet``, through the same ``_exists``). Raw
+    JSON has no ``day``, so use F1 or F2 windowing.
 
     Lines are read as text, not through the JSON datasource: the
     datasource parses only the columns the query reads, so a wrong-typed

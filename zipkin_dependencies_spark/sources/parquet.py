@@ -13,16 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from ..schemas import SPAN_SCHEMA
 
 
-def read_spans_parquet(
-    spark: SparkSession, path: str, missing_as_empty: bool = True
-) -> DataFrame:
+def read_spans_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Read a span table. Day-partitioned layouts (dir per ``day=``) get
     partition pruning for free when the F3 filter applies; flat layouts rely
     on F1's pushed timestamp predicate instead.
 
-    ``missing_as_empty`` (default on, matching the reference's
-    ``ES_INDEX_READ_MISSING_AS_EMPTY``,
-    elasticsearch/.../ElasticsearchDependenciesJob.java:66): a day with no
+    A missing path reads as empty, as the reference sets
+    ``ES_INDEX_READ_MISSING_AS_EMPTY``
+    (elasticsearch/.../ElasticsearchDependenciesJob.java:66): a day with no
     data yet — the cron-today case — is an empty result, not a crash. The
     explicit schema makes the empty frame indistinguishable downstream.
 
@@ -30,7 +28,7 @@ def read_spans_parquet(
     by literal lookup: a literal ``os.path.exists`` on a glob is always false,
     which would silently turn a valid multi-day read into an empty frame —
     data-loss semantics on the primary source."""
-    if missing_as_empty and not _exists(spark, path):
+    if not _exists(spark, path):
         return spark.createDataFrame([], schema=SPAN_SCHEMA)
     return spark.read.schema(SPAN_SCHEMA).parquet(path)
 

@@ -10,7 +10,9 @@ This module maps that contract onto Spark Structured Streaming two ways:
    reference's "re-run today hourly" semantics, but event-driven and without
    re-reading unaffected days (partition pruning on the day column).
 
-2. ``streaming_trace_links`` — *true streaming*: spans grouped by trace via
+2. ``streaming_trace_links`` — *true streaming*: spans pass the batch
+   kernel's input contract (``operators/link.py::kernel_input``, the null
+   rules as one JVM projection), then group by trace via
    ``applyInPandasWithState``; a trace's spans accumulate in state and the
    trace is linked + emitted once no new span arrives for ``trace_gap_ms``
    of processing time (traces have no close marker — a quiet gap is the
@@ -39,34 +41,27 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..linker import DependencyLinker, link_columns
-from ..operators.link import span_lists
-from ..schemas import TRACE_LINKS_SCHEMA
+from ..operators.link import kernel_input
+from ..schemas import LINK_INPUT_SCHEMA, TRACE_LINKS_SCHEMA
 
 #: state kept per in-flight trace: the narrow span columns, column-major
 #: (arrays compress well in the state store and are the column linker's
-#: input), in ``link_columns`` argument order; no timestamp (the stream
-#: links without the F2 window).
+#: input), in ``link_columns`` argument order: LINK_INPUT_SCHEMA between
+#: ``trace_key`` and ``timestamp`` (the stream links without the F2 window)
 _STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("parent_id", T.ArrayType(T.StringType())),
-        T.StructField("id", T.ArrayType(T.StringType())),
-        T.StructField("kind", T.ArrayType(T.StringType())),
-        T.StructField("local_service", T.ArrayType(T.StringType())),
-        T.StructField("remote_service", T.ArrayType(T.StringType())),
-        T.StructField("shared", T.ArrayType(T.BooleanType())),
-        T.StructField("is_error", T.ArrayType(T.BooleanType())),
-    ]
+    [T.StructField(f.name, T.ArrayType(f.dataType)) for f in LINK_INPUT_SCHEMA[1:-1]]
 )
 
-_STATE_COLS = [f.name for f in _STATE_SCHEMA.fields]
+_STATE_COLS = _STATE_SCHEMA.fieldNames()
 
 _EMPTY_LINKS = pd.DataFrame(columns=["parent", "child", "call_count", "error_count"])
 
 
 def _link_columns(cols: dict[str, list]) -> pd.DataFrame:
     """Column-major state → linked per-trace links table."""
-    lists = span_lists([cols[c] for c in _STATE_COLS])
-    links = DependencyLinker().put_links(link_columns(*lists)).link()
+    links = DependencyLinker().put_links(
+        link_columns(*(cols[c] for c in _STATE_COLS))
+    ).link()
     if not links:
         return _EMPTY_LINKS
     return pd.DataFrame(links)[["parent", "child", "call_count", "error_count"]]
@@ -114,10 +109,8 @@ def streaming_trace_links(
         for pdf in pdfs:
             for c in _STATE_COLS:
                 # tolist() → native Python scalars (the state tuple is
-                # pickled to the JVM, which rejects numpy types); scrub NaN
-                acc[c].extend(
-                    None if (x is None or x != x) else x for x in pdf[c].tolist()
-                )
+                # pickled to the JVM, which rejects numpy types)
+                acc[c].extend(pdf[c].tolist())
         state.update(tuple(acc[c] for c in _STATE_COLS))
         if use_event:
             # strictly > current watermark as the API requires; max(wm, 0)
@@ -129,7 +122,7 @@ def streaming_trace_links(
             state.setTimeoutDuration(trace_gap_ms)
         yield _EMPTY_LINKS
 
-    return span_stream.groupBy("trace_key").applyInPandasWithState(
+    return kernel_input(span_stream).groupBy("trace_key").applyInPandasWithState(
         kernel,
         outputStructType=TRACE_LINKS_SCHEMA,
         stateStructType=_STATE_SCHEMA,

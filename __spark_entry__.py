@@ -211,7 +211,7 @@ def q_f3_day_partition_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedupe_replayed_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 span dedup: the span table unioned with itself (storage replay)
-    must produce the ORIGINAL call counts after dropDuplicates on the span
+    must produce the ORIGINAL call counts after the dedupe on the span
     identity columns (SURVEY §2.4 D1; CassandraRowsToDependencyLinks)."""
     from zipkin_dependencies_spark.functions import normalize_spans
     from zipkin_dependencies_spark.operators.dedup import dedupe_spans

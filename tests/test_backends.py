@@ -299,7 +299,7 @@ def test_cassandra_scan_clustering_contract():
 def test_job_clustered_skips_repartition_and_dedupe_exchange(spark):
     """JobConfig(clustered=True) must produce a links plan with NO
     span-scale Exchange before the linker (the bucketed/token-range spanBy
-    parity path) and skip the D1 dropDuplicates exchange; results equal the
+    parity path) and skip the D1 dedupe; results equal the
     default path when the input really is trace-co-located."""
     import pyspark.sql.functions as F
 

@@ -111,6 +111,47 @@ def test_duplicate_spans_deduped(spark, spans_df_factory):
     assert run_links(spark, spans) == {("frontend", "backend"): (1, 0)}
 
 
+def test_dedupe_keeps_the_rows_drop_duplicates_keeps(spark):
+    """``dedupe_spans`` (a window over the kernel's sort order) keeps the
+    same multiset of rows as a ``dropDuplicates`` over every link-input
+    column, the hash dedupe it replaced. Every column is drawn from null
+    and two values, and a row may bring a twin that differs from it in one
+    column only. Each row's 0-2 exact copies sit in later passes over the
+    row list, so across two input partitions they arrive from different
+    map tasks."""
+    from collections import Counter
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import types as T
+
+    from zipkin_dependencies_spark.operators.dedup import dedupe_spans
+    from zipkin_dependencies_spark.schemas import LINK_INPUT_SCHEMA
+
+    values = {T.StringType(): ("a", "b"), T.BooleanType(): (False, True), T.LongType(): (0, 7)}
+    types = [f.dataType for f in LINK_INPUT_SCHEMA]
+    row = st.tuples(*(st.sampled_from((None, *values[t])) for t in types))
+    twin_col = st.none() | st.integers(0, len(types) - 1)
+
+    def twin(r, j):
+        # r with column j nulled, or set if it was null
+        v = values[types[j]][0] if r[j] is None else None
+        return (*r[:j], v, *r[j + 1:])
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(st.tuples(row, st.integers(0, 2), twin_col), min_size=1, max_size=12))
+    def run(drawn):
+        rows = [twin(r, j) for r, _, j in drawn if j is not None]
+        rows += [r for copies in range(3) for r, n, _ in drawn if copies <= n]
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 2), LINK_INPUT_SCHEMA
+        )
+        oracle = df.dropDuplicates(LINK_INPUT_SCHEMA.fieldNames())
+        assert Counter(dedupe_spans(df).collect()) == Counter(oracle.collect())
+
+    run()
+
+
 def test_invalid_kind_dropped_not_fatal(spark, spans_df_factory):
     spans = spans_df_factory(
         [make_span(id="1", kind="BOGUS", local="frontend", remote="backend")]

@@ -85,8 +85,8 @@ def _exchanges_below_kernel(df) -> list[str]:
 
 def test_daily_job_shuffles_spans_once(spark):
     """The job the CLI runs (D1 dedupe on) moves its spans through ONE
-    exchange: ``dedupe_spans`` partitions on trace_key, one of its identity
-    columns, so its dropDuplicates plans no exchange of its own and the
+    exchange: ``dedupe_spans`` partitions on trace_key, one of its window's
+    partition columns, so its window plans no exchange of its own and the
     linker's ``repartition(trace_key)`` is removed as redundant. The
     registered replay query chains the same two operators."""
     import __spark_entry__ as e
@@ -105,6 +105,41 @@ def test_daily_job_shuffles_spans_once(spark):
     [span_exchange] = [a for a in _exchanges_below_kernel(replayed) if "trace_key#" in a]
     assert span_exchange.startswith("hashpartitioning(trace_key#")
     assert "REPARTITION_BY_COL" in span_exchange
+
+
+def _kernel_stage(df) -> tuple[list[str], list[str]]:
+    """→ (names of every node below the plan's one MapInPandas, names of
+    those above the first exchange of each branch: the kernel's stage)."""
+    plan = df._jdf.queryExecution().executedPlan().executedPlan()
+    [kernel] = [n for n in _plan_nodes(plan) if n.nodeName() == "MapInPandas"]
+    below = list(_plan_nodes(kernel))[1:]
+    stage, todo = [], [kernel.child()]
+    while todo:
+        node = todo.pop()
+        stage.append(node.nodeName())
+        if node.nodeName() != "Exchange":
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return [n.nodeName() for n in below], stage
+
+
+def test_daily_job_dedupes_and_groups_with_one_sort(spark):
+    """The D1 dedupe is a window over the kernel's own sort order
+    (schemas.KERNEL_SORT_ORDER), so one sort above the span exchange both
+    dedupes and groups the traces: the linker's sortWithinPartitions is
+    removed as redundant, and no span-scale HashAggregate runs below the
+    kernel. Checked on the CLI's job and on the registered replay query."""
+    import __spark_entry__ as e
+    from zipkin_dependencies_spark.plans.job import DependencyLinksJob, JobConfig
+    from zipkin_dependencies_spark.testdata import derived_spans
+
+    spans = derived_spans(spark, SF).localCheckpoint(eager=True)
+    job = DependencyLinksJob(spark, JobConfig(day="1996-03-15", spans_path="unused"))
+    for df in (job.links(spans), e.q_dedupe_replayed_links(spark, SF)):
+        below, stage = _kernel_stage(df)
+        assert "HashAggregate" not in below
+        assert stage.count("Sort") == 1
+        assert "Window" in stage
 
 
 def _plan_nodes(plan):

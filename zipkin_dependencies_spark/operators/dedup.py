@@ -1,36 +1,41 @@
 """Span dedup (SURVEY §2.4 D1/D2).
 
 The reference dedupes redundantly-stored spans per trace with a
-LinkedHashSet over the 9 projected fields
-(cassandra3/.../CassandraRowsToDependencyLinks.java:31-36). Relationally
-that's dropDuplicates over the projected columns, done *within* the trace
-grouping: the spans are hash-partitioned on ``trace_key`` first. Because
-``trace_key`` is one of the identity columns, that partitioning already
-meets the dedupe aggregate's clustering requirement, and a later
+LinkedHashSet over the 9 projected fields while it walks the trace
+(cassandra3/.../CassandraRowsToDependencyLinks.java:31-36). Here that is a
+window over the kernel's own sort: hash-partition on ``trace_key``, then
+keep the first row of each group of identical rows (``row_number()`` over
+all 9 fields, ``= 1``). The window sorts on ``schemas.KERNEL_SORT_ORDER``,
+the order the linker sorts in, so Spark removes the linker's sort as
+redundant: one sort both puts copies side by side and groups the traces,
+and the stage plans no hash aggregate. The window holds one identity group
+at a time, where a hash dedupe holds a task's whole distinct span set.
+
+``trace_key`` is one of the window's partition columns, so the trace
+exchange already meets its clustering requirement, and a later
 ``repartition("trace_key")`` of the same width (the linker's, or
 ``trace_paths``') is removed by Spark's EnsureRequirements. So the dedupe
 shares the trace exchange: the daily job shuffles its spans once.
 
-This gives up the map-side partial dedupe (the aggregate now runs after
-the exchange), which only shrinks the exchange when storage replays are
-common. On a day with every span file stored twice (perfbench generator,
-``day_typical`` seed 4243, about 200k rows, 4 cores), against the old
-pre-shuffle dedupe, the CLI job with its parquet write still got faster:
-median wall 1.66 → 1.49 s and CPU 4.98 → 4.21 core-s over 12 interleaved
-reps on one JVM. The linker kernel's tree merge makes exact duplicates
-harmless anyway (tests/test_linker_properties.py).
+There is no map-side partial dedupe (it would only shrink the exchange
+when storage replays are common). The linker kernel's tree merge makes
+exact duplicates harmless anyway (tests/test_linker_properties.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
-from ..schemas import LINK_INPUT_SCHEMA
-
-#: the projected fields that define span identity for dedup purposes: all
-#: of the linker's input columns
-SPAN_IDENTITY_COLS = LINK_INPUT_SCHEMA.fieldNames()
+from ..schemas import KERNEL_SORT_ORDER
 
 
 def dedupe_spans(normalized_spans: DataFrame) -> DataFrame:
-    return normalized_spans.repartition("trace_key").dropDuplicates(SPAN_IDENTITY_COLS)
+    # the rows of one group are identical, so any of them may come first
+    copies = Window.partitionBy(*KERNEL_SORT_ORDER).orderBy(F.lit(0))
+    return (
+        normalized_spans.repartition("trace_key")
+        .withColumn("__copy", F.row_number().over(copies))
+        .filter(F.col("__copy") == 1)
+        .drop("__copy")
+    )

@@ -17,8 +17,8 @@ O(|services|²) per partition, orders of magnitude smaller than its input.
 
 Scale notes (100 TB):
 - the repartition(trace_key) shuffle is THE big shuffle of the pipeline;
-  the D1 dedupe shares it (operators/dedup.py). Bucketed span storage on
-  trace_key removes it entirely (``clustered``, G1 parity — see
+  the D1 dedupe shares it and its sort (operators/dedup.py). Bucketed span
+  storage on trace_key removes it entirely (``clustered``, G1 parity — see
   plans/job.py notes).
 - per-trace skew ("Heavy" scenario): one giant trace lands on one task,
   together with whatever light traces hash beside it. The kernel is O(n) in
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..linker import DependencyLinker, link_columns, roots_in_day_window
-from ..schemas import LINK_INPUT_SCHEMA, TRACE_LINKS_SCHEMA
+from ..schemas import KERNEL_SORT_ORDER, LINK_INPUT_SCHEMA, TRACE_LINKS_SCHEMA
 from .aggregate import aggregate_links
 
 #: fraction of spans the seeded heavy-trace pre-pass samples (see
@@ -159,8 +159,9 @@ def trace_links_partitioned(
       not once per *trace*: Arrow batches stream through, and only the
       trace open at a batch boundary is carried over. Input that
       ``dedupe_spans`` already hash-partitioned on trace_key at the same
-      width (the daily job's) keeps that exchange: Spark drops this
-      repartition as redundant, so the job still shuffles its spans once.
+      width and sorted in ``KERNEL_SORT_ORDER`` (the daily job's) keeps
+      that exchange and that sort: Spark drops this repartition and this
+      sort as redundant, so the job shuffles and sorts its spans once.
     - links are partially aggregated map-side into one ``DependencyLinker``
       per task before emission, so the final A2 exchange moves one row per
       distinct (parent, child) per partition — the reference's reduceByKey
@@ -199,12 +200,10 @@ def trace_links_partitioned(
     # kernel's root election ("first parentless span", linker.py build_tree)
     # and its merge of reports that share (id, shared) (first non-null field
     # wins) both depend on arrival order. Sorting on the full identity tuple
-    # pins both, so shuffle arrival order never decides a link — zero extra
-    # shuffle, the sort already exists.
-    order_cols = [
-        *group_cols, "id", "shared", "parent_id", "kind",
-        "local_service", "remote_service", "is_error", "timestamp",
-    ]
+    # pins both, so shuffle arrival order never decides a link. It is the
+    # D1 dedupe's window order too, so after ``dedupe_spans`` Spark plans
+    # no sort here: the dedupe's sort already delivers it.
+    order_cols = ([day_col] if day_col else []) + KERNEL_SORT_ORDER
     out_cols = ([day_col] if day_col else []) + [
         "parent", "child", "call_count", "error_count",
     ]

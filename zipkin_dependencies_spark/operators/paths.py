@@ -27,7 +27,9 @@ twin by definition):
   ``dedupe_spans`` first (a duplicate id keeps only one of its rows in
   the walk). That costs no extra shuffle: the dedupe's trace_key
   partitioning survives the 4-column projection, so the walker's
-  repartition(trace_key) plans no exchange of its own.
+  repartition(trace_key) plans no exchange of its own, and the dedupe's
+  sort (trace_key first) already groups the traces, so the walker's
+  sortWithinPartitions plans no sort of its own either.
 
 Scale: the final count is |distinct paths| cardinality with a
 TakeOrdered top-k — no global sort, no driver collect.

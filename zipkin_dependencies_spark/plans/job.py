@@ -2,14 +2,16 @@
 
 config → SparkSession → source adapter → normalize to the v2 span frame →
 day-filter variant (F1/F2/F3, default F2 parity) → repartition(trace_key) →
-dedupe → sortWithinPartitions → the kernel's null rules
+one sort in schemas.KERNEL_SORT_ORDER that both dedupes (a row_number
+window) and groups the traces → the kernel's null rules
 (operators/link.py::kernel_input) → mapInPandas(linker per trace, via
 operators/link.py::_sorted_groups) → groupBy(parent, child).agg(sum, sum)
 → day-partition overwrite write.
 
-One Catalyst plan end to end, with one span-scale shuffle: the dedupe
-hash-partitions on trace_key, so the linker's own repartition(trace_key)
-plans no second exchange (operators/dedup.py). The only Python hop is the
+One Catalyst plan end to end, with one span-scale shuffle and one sort: the
+dedupe hash-partitions on trace_key and sorts in the linker's order, so the
+linker's own repartition(trace_key) and sortWithinPartitions plan nothing
+of their own (operators/dedup.py). The only Python hop is the
 Arrow-vectorized linker kernel; control crosses driver→executor at the
 write action only.
 

@@ -21,7 +21,8 @@ from __future__ import annotations
 SNAPSHOT_QUERIES: tuple[str, ...] = (
     "dependency_links",
     # the D1 dedupe chained to the linker, as the daily job runs it: the
-    # dedupe's trace_key exchange is the only span-scale one
+    # dedupe's trace_key exchange is the only span-scale one, and its
+    # window's sort the only sort above it
     "dedupe_replayed_links",
     "links_relational",
     "v1_links",

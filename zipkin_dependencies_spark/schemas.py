@@ -101,6 +101,18 @@ LINK_INPUT_SCHEMA = T.StructType(
     ]
 )
 
+#: The one order the daily job sorts its link input in: trace first, then
+#: every other field. The D1 dedupe's window (operators/dedup.py) and the
+#: linker's ``sortWithinPartitions`` (operators/link.py) both take it, so
+#: Spark plans one sort for the two; a second order would plan a second
+#: sort. Sorting on all fields also pins each trace's span order for the
+#: kernel (see ``trace_links_partitioned``).
+KERNEL_SORT_ORDER = [
+    "trace_key", "id", "shared", "parent_id", "kind",
+    "local_service", "remote_service", "is_error", "timestamp",
+]
+assert sorted(KERNEL_SORT_ORDER) == sorted(LINK_INPUT_SCHEMA.fieldNames())
+
 #: Per-trace linker output (pre global aggregation).
 TRACE_LINKS_SCHEMA = T.StructType(
     [
